@@ -8,16 +8,36 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType
   *
   * The engine's correctness gate is a differential compare against a DuckDB
   * oracle, so every aggregate we emit must be *bit-deterministic* across
-  * engines. Double-precision SUM is order-dependent under parallel
-  * execution; we therefore route sums through DECIMAL(38,6) (exact integer
-  * arithmetic, associative, hence partition-order independent) and cast
-  * back to double. Variance/correlation are then derived from those exact
-  * sums with a fixed closed formula instead of the engines' (different)
-  * streaming algorithms.
+  * engines. A double SUM depends on the order partitions combine in; an
+  * integer sum does not (integer addition is associative). Every exact sum
+  * is therefore an integer sum of scaled terms, converted back to double
+  * once per group, and variance/correlation are fixed closed formulas over
+  * those sums instead of the engines' (different) streaming algorithms.
+  *
+  * The sum contract, one kernel per path:
+  *  - Decimal path, [[exactSum]] (DECIMAL(38,6)) and [[detSum]]
+  *    (round(term, scale) as DECIMAL(38, scale+2), scale 12 by default):
+  *    any magnitude the decimal holds, per-row BigDecimal cost. NULL, NaN
+  *    and ±Inf terms are skipped; a group with no finite term sums to NULL.
+  *  - Grid path, [[gridSum]] at scale 6 or 12: bit-identical to the
+  *    decimal path at that scale (exactSum at 6, detSum at 12) while every
+  *    scaled term k = round(term·10^scale) of a group lies in
+  *    −2⁵¹ ≤ k < 2⁵¹, i.e. |term| < 2.25·10⁹ at scale 6 and |term| < 2251.8
+  *    at scale 12. Per row it is branch-free long arithmetic; per group it
+  *    checks that envelope and fails with "gridSum(scale=…): a term left
+  *    the grid envelope |term|·10^scale < 2^51 …" when a term leaves it.
+  *    Same NULL rule as the decimal path.
+  *  - A call site names the decimal path for every sum whose terms can
+  *    leave the envelope (money-scale squares such as extendedprice² ≈
+  *    1.3·10¹⁰, raw distances, coarse-scale [[detSum]] callers). The
+  *    moment formulas take one [[Sum]] per power sum for that reason.
+  *  - [[scaledLongSum]] is the exact sum of round(term·10¹²) as longs,
+  *    correctly rounded to double and divided by 10¹²: the aggregate twin
+  *    of the JVM [[ScaledLongSums]] and of SqlGen.sqlScaledLongSum.
   *
   * Scale note: decimal sums are whole-stage-codegen'd in Spark and shuffle
-  * exactly like double sums (map-side partial aggregation), so the 100 TB
-  * plan shape is unchanged — only the accumulator type widens.
+  * exactly like double sums (map-side partial aggregation), so the plan
+  * shape is unchanged — only the accumulator type widens.
   */
 object Tables {
 
@@ -42,13 +62,6 @@ object Tables {
     else df
   }
 
-  // ---------------------------------------------------------------------
-  // Deterministic aggregate building blocks (oracle-exact)
-  // ---------------------------------------------------------------------
-
-  private val Dec = DecimalType(38, 6)
-
-  /** Order-independent exact sum of a double column. */
   /** Frees the block-manager storage behind an EAGER
     * `df.localCheckpoint(...)` result. Iterative operators (Lloyd
     * rounds, BPE merge rounds, label propagation) re-checkpoint a
@@ -66,220 +79,140 @@ object Tables {
       case _ => ()
     }
 
-  def exactSum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
+  // ---------------------------------------------------------------------
+  // Deterministic aggregate building blocks (oracle-exact)
+  // ---------------------------------------------------------------------
+
+  /** One exact sum, named at the call site: [[exactSum]], [[grid6]] or a
+    * [[detSum]]/[[gridSum]] at a fixed scale. */
+  type Sum = Column => Column
+
+  /** Order-independent exact sum of a double column (decimal path). */
+  def exactSum(c: Column): Column = sum(c.cast(DecimalType(38, 6))).cast(DoubleType)
+
+  /** Order-independent sum of derived double terms (decimal path): round
+    * each term to `scale` decimals, sum as DECIMAL — deterministic across
+    * engines up to the per-term libm ulp (absorbed by the rounding). Used
+    * wherever a sum of *derived* doubles (entropy terms, distances,
+    * densities) feeds an oracle-compared result. Use a COARSER scale for
+    * large-magnitude terms: round(t, 12) on |t| ≳ 10⁴ makes t·10¹² exceed
+    * 2⁵³, where DuckDB's float-path ROUND loses ulps that Spark's
+    * decimal-semantics ROUND doesn't. Pick scale so max|t|·10^scale < 2⁵³. */
+  def detSum(term: Column, scale: Int = 12): Column =
+    sum(round(term, scale).cast(DecimalType(38, scale + 2))).cast(DoubleType)
+
+  /** The checked long grid at [[exactSum]]'s scale. */
+  val grid6: Sum = gridSum(_, 6)
+
+  /** The grid path of the sum contract (see the header): bit-identical to
+    * [[exactSum]] at scale 6 and to [[detSum]] at scale 12 inside the
+    * envelope, a loud error outside it.
+    *
+    * Why it is exact: round(t, s) is the double nearest k·10⁻ˢ for the
+    * integer k the decimal cast produces (Spark's double→DECIMAL cast is
+    * HALF_UP of the double's shortest decimal repr, which round() applies
+    * too), so d·10ˢ lands within |k|·2⁻⁵² < 0.5 of k and the half-up floor
+    * recovers k exactly while |k| < 2⁵¹. The bound is not widenable by
+    * splitting off the integer part: that changes the shortest-repr digits
+    * the cast sees (1.0000025 − 1 = 2.4999999999…e-6, a different half-up
+    * image). Σk is exact in [[digitSum]] (two radix-2²⁶ digits cover
+    * |k| < 2⁵¹), and the string-exponent cast parses it correctly rounded
+    * — the same double the decimal sum produces.
+    *
+    * Per row the kernel is branch-free: t + t·0 is the bit-exact identity
+    * on finite terms and NaN on ±Inf/NaN, which the floor→long cast lands
+    * at 0 (an additive identity). A CASE guard per row defeated codegen
+    * subexpression elimination and re-evaluated the term once per digit
+    * sum (ml_linear_regression 3.8 → 8.2 s at sf1m). Per group one max
+    * over ⌊(k xor k≫63)/2⌋ + [term finite] carries both checks: it is 0
+    * when no term is finite (NULL, as the decimal path) and above 2⁵⁰
+    * when some k leaves [−2⁵¹, 2⁵¹) — floor's saturation at Long.MinValue
+    * and Long.MaxValue included, since xor with the sign never overflows.
+    * The checks are nested `if`s over a two-digit core, not a CASE over
+    * three digits: the final aggregate's generated method holds every
+    * result expression, and HotSpot does not JIT-compile a method past
+    * 8000 bytes of bytecode (DontCompileHugeMethods), so the stage would
+    * run interpreted (basic_stats: 7201 bytes before the check, 9385 with
+    * three digits and a CASE, 7628 as written). */
+  def gridSum(term: Column, scale: Int): Column = {
+    val u = term + term * lit(0.0)
+    val k = floor(round(u, scale) * lit(s"1e$scale".toDouble) + lit(0.5))
+    val env = max(shiftright(k.bitwiseXOR(shiftright(k, 63)), 1) +
+      (!isnan(u)).cast(LongType))
+    val total = concat(digitSum(k, 26, 2).cast(StringType), lit(s"E-$scale"))
+      .cast(DoubleType)
+    val bound = f"${math.pow(2, 51) / s"1e$scale".toDouble}%.6g"
+    call_function("if", env > (1L << 50), raise_error(lit(
+        s"gridSum(scale=$scale): a term left the grid envelope " +
+        s"|term|·10^$scale < 2^51 (|term| < $bound); " +
+        "sum it on the decimal path (Tables.exactSum / Tables.detSum)")),
+      call_function("if", env === 0L, lit(null).cast(DoubleType), total))
+  }
+
+  /** Exact, overflow-proof sum of round(c·10¹²) at long speed: the
+    * aggregate twin of [[ScaledLongSums]] and SqlGen.sqlScaledLongSum.
+    * The result is bit-identical to sum(x::DECIMAL(38,0))::double / 10¹²
+    * (both sum the same longs exactly), but the hot path stays in
+    * whole-stage codegen long arithmetic with no per-row Decimal
+    * allocation (~3× on the corr moment scans; a bare sum(long) wrapped
+    * at the sf10 rehearsal's 60M rows where Σ|term|·10¹² first passed
+    * 2⁶³). Three radix-2²¹ digits cover the full long. */
+  def scaledLongSum(c: Column): Column =
+    (digitSum(round(c * lit(1e12), 0).cast(LongType), 21, 3).cast(DoubleType) /
+      lit(1e12)).cast(DoubleType)
+
+  /** Exact Σk of a long column, split into `digits` radix-2^width digits:
+    * k ≡ Σᵢ ((k≫width·i) & M)·2^(width·i) in two's complement, the top
+    * digit signed (the arithmetic shift, unmasked). Each digit is summed as
+    * a plain long and the digit sums recombine in DECIMAL(38,0) — a few
+    * scalar ops per group, never per row. A digit is below 2^width in
+    * magnitude per row, so a digit sum overflows only past 2^(63−width)
+    * rows per group (2³⁷ at width 26, 2⁴² at width 21). */
+  private def digitSum(k: Column, width: Int, digits: Int): Column = {
+    val mask = lit((1L << width) - 1)
+    (digits - 1 to 0 by -1).map { i =>
+      val shifted = if (i == 0) k else shiftright(k, width * i)
+      val d = if (i == digits - 1) shifted else shifted.bitwiseAND(mask)
+      val s = sum(d).cast(DecimalType(38, 0))
+      if (i == 0) s else s * lit(1L << (width * i))
+    }.reduce(_ + _)
+  }
 
   /** Exact mean = exact sum / non-null count (single double division). */
-  def exactMean(c: Column): Column = exactSum(c) / count(c)
+  def exactMean(c: Column, s: Sum = exactSum): Column = s(c) / count(c)
 
   /** Sample variance (ddof=1, Orange's convention — reference
     * Orange/widgets/data/owgroupby.py:60-96) from exact sums:
-    * (Σx² − (Σx)²/n) / (n−1). Deterministic across engines. */
-  def exactVarSamp(c: Column): Column = {
-    val s  = exactSum(c)
-    val ss = sum((c * c).cast(Dec)).cast(DoubleType)
+    * (Σx² − (Σx)²/n) / (n−1); `s` sums x, `sq` sums x². */
+  def exactVarSamp(c: Column, s: Sum = exactSum, sq: Sum = exactSum): Column = {
+    val sx = s(c)
     val n  = count(c)
-    (ss - s * s / n) / (n - lit(1))
+    (sq(c * c) - sx * sx / n) / (n - lit(1))
   }
 
-  def exactStdSamp(c: Column): Column = sqrt(exactVarSamp(c))
-
-  /** Population variance from exact sums (ddof=0). */
-  def exactVarPop(c: Column): Column = {
-    val s  = exactSum(c)
-    val ss = sum((c * c).cast(Dec)).cast(DoubleType)
-    val n  = count(c)
-    (ss - s * s / n) / n
-  }
+  def exactStdSamp(c: Column, s: Sum = exactSum, sq: Sum = exactSum): Column =
+    sqrt(exactVarSamp(c, s, sq))
 
   /** Pearson correlation from exact sums — fixed closed formula, identical
-    * bit pattern in Spark and DuckDB. */
-  def exactCorr(x: Column, y: Column): Column = {
+    * bit pattern in Spark and DuckDB. `s` sums x and y, `xy`, `xx` and `yy`
+    * the products. */
+  def exactCorr(x: Column, y: Column, s: Sum = exactSum, xy: Sum = exactSum,
+                xx: Sum = exactSum, yy: Sum = exactSum): Column = {
     val n   = count(x).cast(DoubleType)
-    val sx  = exactSum(x);       val sy  = exactSum(y)
-    val sxx = exactSum(x * x);   val syy = exactSum(y * y)
-    val sxy = exactSum(x * y)
+    val sx  = s(x);      val sy  = s(y)
+    val sxx = xx(x * x); val syy = yy(y * y)
+    val sxy = xy(x * y)
     (n * sxy - sx * sy) /
       (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
   }
 
-  /** Sample covariance from exact sums. */
-  def exactCovarSamp(x: Column, y: Column): Column = {
+  /** Sample covariance from exact sums; `s` sums x and y, `xy` sums x·y. */
+  def exactCovarSamp(x: Column, y: Column, s: Sum = exactSum,
+                     xy: Sum = exactSum): Column = {
     val n   = count(x).cast(DoubleType)
-    val sx  = exactSum(x); val sy = exactSum(y)
-    val sxy = exactSum(x * y)
+    val sx  = s(x); val sy = s(y)
+    val sxy = xy(x * y)
     (sxy - sx * sy / n) / (n - lit(1))
-  }
-
-  /** Order-independent sum of small double terms: round each term to 12
-    * decimals, sum as DECIMAL — deterministic across engines up to the
-    * per-term libm ulp (absorbed by the rounding). Used wherever a sum of
-    * *derived* doubles (entropy terms, distances, densities) feeds an
-    * oracle-compared result. */
-  def detSum(term: Column): Column =
-    sum(round(term, 12).cast(DecimalType(38, 14))).cast(DoubleType)
-
-  /** Opt-in fast path of [[detSum]] for callers whose terms are
-    * PROVABLY pre-scaled small: bit-identical while
-    * max|term|·10¹² < 2⁵¹ (i.e. |term| ≲ 2.2·10³). Callers must argue
-    * the bound at the call site — the r16 ScoringSpec fixture showed
-    * raw-magnitude terms (LOF reach distances ~10⁹) silently saturate
-    * the long grid where the decimal path stays exact, so this is NOT
-    * a drop-in replacement for the general-purpose detSum. */
-  /** Split-radix digit sums of a long column, recombined exactly in
-    * DECIMAL(38,0) per GROUP (three scalar ops, never per row): the
-    * [[scaledLongSum]] device. Per-row digits are ≤ 2²¹, so a digit sum
-    * only overflows past ~2⁴¹ rows per group. */
-  private def gridDigitSum(k: Column): Column = {
-    val m = lit((1L << 21) - 1)
-    val dec = DecimalType(38, 0)
-    val hi = sum(shiftright(k, 42)).cast(dec) * lit(1L << 42)
-    val mid = sum(shiftright(k, 21).bitwiseAND(m)).cast(dec) * lit(1L << 21)
-    val lo = sum(k.bitwiseAND(m)).cast(dec)
-    hi + mid + lo
-  }
-
-  /** Opt-in fast path of [[exactSum]] — bit-identical (same
-    * NULL/NaN/Inf skips, same correctly-rounded double) while
-    * |c| < 2.25·10⁹ (= 2⁵¹/10⁶). Spark's double→DECIMAL(38,6) cast is
-    * HALF_UP at scale 6 of the double's SHORTEST DECIMAL REPR
-    * (BigDecimal(Double.toString)), and round(c, 6) applies the very
-    * same operation before converting back to double — so
-    * round(c, 6)·10⁶ sits within |k|·2⁻⁵² < 0.5 of the cast's integer k
-    * and the half-up floor recovers k exactly (the proven detSumFast
-    * recovery, at scale 6). The digit sums recombine Σk exactly and the
-    * string-exponent cast parses correctly rounded — the same double the
-    * decimal sum produced. Hot path: codegen'd long adds instead of a
-    * per-row BigDecimal allocation.
-    *
-    * The bound is NOT widenable by splitting off the integer part:
-    * beyond 2⁵¹ the rounded double physically cannot carry k's digits
-    * (ulp > 10⁻⁶), and subtracting the integer part changes the
-    * shortest-repr digits the cast sees (1.0000025 − 1 =
-    * 2.4999999999…e-6 — a DIFFERENT half-up image). Sites with terms
-    * beyond the envelope (extendedprice² ≈ 1.3·10¹⁰) keep THAT one sum
-    * on the decimal path — see the mixed-moment helpers below. */
-  def exactSumFast(c: Column): Column = {
-    // same branch-free non-finite guard as detSumFast: c + c·0 is the
-    // bit-exact identity on finite terms and sends ±Inf/NaN through NaN
-    // to 0 (additive identity — the decimal cast's NULL-skip, modulo the
-    // all-non-finite-group 0-vs-NULL deviation documented there); NULLs
-    // propagate and are skipped identically. A when()-guard suppressed
-    // codegen subexpression elimination across the digit sums.
-    val k = floor(round(c + c * lit(0.0), 6) * lit(1e6) + lit(0.5))
-    concat(gridDigitSum(k).cast(StringType), lit("E-6")).cast(DoubleType)
-  }
-
-  /** [[exactMean]] on the [[exactSumFast]] grid (same division).
-    * Caller bound: |c| < 2.25·10⁹. */
-  def exactMeanFast(c: Column): Column = exactSumFast(c) / count(c)
-
-  /** [[exactVarSamp]] with Σc on the [[exactSumFast]] grid and Σc²
-    * selectable: pass sqFast = false when |c|² can exceed the 2.25·10⁹
-    * envelope (money-scale columns) — that one sum then stays on the
-    * decimal path, bit-identical either way. */
-  def exactVarSampFast(c: Column, sqFast: Boolean = true): Column = {
-    val s  = exactSumFast(c)
-    val ss = if (sqFast) exactSumFast(c * c)
-             else sum((c * c).cast(Dec)).cast(DoubleType)
-    val n  = count(c)
-    (ss - s * s / n) / (n - lit(1))
-  }
-
-  def exactStdSampFast(c: Column, sqFast: Boolean = true): Column =
-    sqrt(exactVarSampFast(c, sqFast))
-
-  /** [[exactCorr]] with per-moment grid selection: sx/sy/sxy always ride
-    * the fast grid (caller bound: |x|, |y|, |x·y| < 2.25·10⁹); pass
-    * xxFast/yyFast = false for a side whose SQUARE exceeds the envelope. */
-  def exactCorrFast(x: Column, y: Column, xxFast: Boolean = true,
-                    yyFast: Boolean = true): Column = {
-    val n   = count(x).cast(DoubleType)
-    val sx  = exactSumFast(x);       val sy  = exactSumFast(y)
-    val sxx = if (xxFast) exactSumFast(x * x) else exactSum(x * x)
-    val syy = if (yyFast) exactSumFast(y * y) else exactSum(y * y)
-    val sxy = exactSumFast(x * y)
-    (n * sxy - sx * sy) /
-      (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
-  }
-
-  /** [[exactCovarSamp]] on the [[exactSumFast]] grid.
-    * Caller bound: |x|, |y|, |x·y| < 2.25·10⁹. */
-  def exactCovarSampFast(x: Column, y: Column): Column = {
-    val n   = count(x).cast(DoubleType)
-    val sx  = exactSumFast(x); val sy = exactSumFast(y)
-    val sxy = exactSumFast(x * y)
-    (sxy - sx * sy / n) / (n - lit(1))
-  }
-
-  def detSumFast(term: Column): Column = {
-    // Bit-identical fast path of the decimal formulation
-    //   sum(round(term, 12).cast(DecimalType(38, 14))).cast(double).
-    // round(term, 12) is exactly k·10⁻¹² for an integer k (the shortest
-    // decimal repr of the rounded double IS k·10⁻¹² while |k| ≲ 2⁵¹, so
-    // the decimal cast recovers precisely k at scale 14), hence the
-    // decimal sum is Σk·10⁻¹². The fast path recovers k per row as a
-    // LONG — d·10¹² lands within |k|·2⁻⁵² ≪ 0.5 of k, so the half-up
-    // floor is exact — and sums three radix-2²¹ digits as plain longs:
-    // whole-stage-codegen primitive adds instead of a precision-38
-    // decimal agg buffer that boxes a BigDecimal per row (measured ~3×
-    // on moment scans, see scaledLongSum). The digit sums recombine in
-    // DECIMAL (exact, per GROUP not per row) and Σk·10⁻¹² converts
-    // through the string-exponent cast, which parses correctly rounded —
-    // the same double the decimal cast produced.
-    // Branch-free non-finite guard: t + t·0 is the bit-exact identity on
-    // finite terms (t·0 = ±0, t ± 0 = t) and maps ±Inf/NaN to NaN, which
-    // the floor→long cast lands at 0 — an additive identity, the same
-    // net sum as the decimal path's NULL-skip whenever the group has any
-    // finite term (the ADVICE r16 Inf corruption is gone; an ALL-
-    // non-finite group yields 0 where decimal yields NULL — the
-    // documented pre-r17 deviation, unreachable at the audited sites).
-    // A CASE/when guard here (the first r17 cut) defeated codegen
-    // subexpression elimination and re-evaluated the moment polynomial
-    // once per digit sum: ml_linear_regression 3.8 → 8.2 s at sf1m.
-    // Digit sums overflow only past 2⁴² rows per group.
-    val x = floor(round(term + term * lit(0.0), 12) * lit(1e12) + lit(0.5))
-    val m = lit((1L << 21) - 1)
-    val dec = DecimalType(38, 0)
-    val hi = sum(shiftright(x, 42)).cast(dec) * lit(1L << 42)
-    val mid = sum(shiftright(x, 21).bitwiseAND(m)).cast(dec) * lit(1L << 21)
-    val lo = sum(x.bitwiseAND(m)).cast(dec)
-    concat((hi + mid + lo).cast(StringType), lit("E-12")).cast(DoubleType)
-  }
-
-  /** detSum with an explicit rounding scale. Use a COARSER scale for
-    * large-magnitude terms: round(t, 12) on |t| ≳ 10⁴ makes t·10¹²
-    * exceed 2⁵³, where DuckDB's float-path ROUND loses ulps that
-    * Spark's decimal-semantics ROUND doesn't — the engines then
-    * disagree. Pick scale so max|t|·10^scale < 2⁵³.
-    *
-    * Deliberately NOT on the split-radix long fast path: coarse-scale
-    * callers exist precisely because their terms are large (up to the
-    * 2⁵³ grid edge, beyond the long path's 2⁵¹ exact-recovery bound),
-    * and they all sum GROUP-level rows (dozens–thousands), where the
-    * decimal accumulator costs nothing measurable. */
-  def detSum(term: Column, scale: Int): Column =
-    sum(round(term, scale).cast(DecimalType(38, scale + 2))).cast(DoubleType)
-
-  /** Exact, overflow-proof sum of round(c·10¹²) at long speed: the
-    * scaled long is decomposed into three radix-2²¹ digits (signed top
-    * digit via arithmetic shift — x ≡ (x≫42)·2⁴² + ((x≫21)&M)·2²¹ +
-    * (x&M) in two's complement), each digit summed as a plain long.
-    * Per-row digit magnitude ≤ 2²¹, so a digit sum only overflows past
-    * 2⁴² ≈ 4.4·10¹² rows PER GROUP; the three digit sums recombine in
-    * DECIMAL(38,0) (three scalar ops per group, never per row). The
-    * result is bit-identical to sum(x::DECIMAL(38,0)) — both are exact
-    * integer sums — but the hot path stays in whole-stage codegen long
-    * arithmetic with no per-row Decimal allocation (~3× on the corr
-    * moment scans; sum(long) itself wrapped at the sf10 rehearsal's
-    * 60M rows where Σ|term|·10¹² first passed 2⁶³). */
-  def scaledLongSum(c: Column): Column = {
-    val x = round(c * lit(1e12), 0).cast(LongType)
-    val m = lit((1L << 21) - 1)
-    val d = DecimalType(38, 0)
-    val hi = sum(shiftright(x, 42)).cast(d) * lit(1L << 42)
-    val mid = sum(shiftright(x, 21).bitwiseAND(m)).cast(d) * lit(1L << 21)
-    val lo = sum(x.bitwiseAND(m)).cast(d)
-    ((hi + mid + lo).cast(DoubleType) / lit(1e12)).cast(DoubleType)
   }
 
   // ---------------------------------------------------------------------

@@ -51,10 +51,10 @@ object ScoreOps {
   def anovaF(df: DataFrame, x: String, g: String): DataFrame = {
     val rows = df.filter(col(x).isNotNull && col(g).isNotNull)
       .select(col(x).as("xv"), col(g).as("gv"))
-    // per-row sums on the exactSumFast long grid (caller bound:
+    // per-row sums on the long grid (caller bound:
     // |x| < 2.25e9 — the score_anova fixture has x = l_quantity ≤ 51)
     val grp = rows.groupBy(col("gv")).agg(
-        exactSumFast(col("xv")).as("sg"),
+        grid6(col("xv")).as("sg"),
         count(lit(1)).as("ng"))
     val tot = grp.agg(
       exactSum(col("sg")).as("s"), sum(col("ng")).as("n"),
@@ -68,7 +68,7 @@ object ScoreOps {
     val within = rows
       .join(broadcast(grp.select(col("gv"), mg.as("mg"))), "gv")
       .agg(round(detSum((col("xv") - col("mg")) * (col("xv") - col("mg"))), 6)
-        .as("ssw")) // (x−mg)² can brush past detSumFast's 2.2e3 envelope — stays decimal
+        .as("ssw")) // (x−mg)² can leave the scale-12 grid's 2.2e3 envelope — stays decimal
     between.crossJoin(within)
       .select(
         round((col("ssb") / (col("k") - 1)) /

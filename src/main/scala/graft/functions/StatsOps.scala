@@ -18,20 +18,17 @@ object StatsOps {
 
   /** Per-column min/max/mean/var/#nan/#non-nan (basic_stats.py:18-60) in a
     * single pass; output = one row with `<col>_<stat>` columns.
-    * Moments ride the exactSumFast long grid (caller bound:
-    * |column| < 2.25e9); the variance's SQUARE sum additionally needs
-    * |column|² inside the envelope — name such columns in `sqFast`
-    * (money-scale squares like extendedprice² ≈ 1.3e10 exceed it and
-    * keep that one sum decimal). */
-  def basicStats(df: DataFrame, cols: Seq[String],
-                 sqFast: Set[String] = Set.empty): DataFrame = {
-    val aggs = cols.flatMap { c =>
+    * Means and Σx ride the checked long grid; each column names the sum
+    * for its squares (`grid6`, or `exactSum` where x² can leave the grid
+    * envelope, e.g. money-scale extendedprice² ≈ 1.3e10). */
+  def basicStats(df: DataFrame, cols: Seq[(String, Sum)]): DataFrame = {
+    val aggs = cols.flatMap { case (c, sq) =>
       val v = col(c)
       Seq(
         min(v).as(s"${c}_min"),
         max(v).as(s"${c}_max"),
-        exactMeanFast(v).as(s"${c}_mean"),
-        exactVarSampFast(v, sqFast = sqFast(c)).as(s"${c}_var"),
+        exactMean(v, grid6).as(s"${c}_mean"),
+        exactVarSamp(v, grid6, sq).as(s"${c}_var"),
         (count(lit(1)) - count(v)).as(s"${c}_nans"),
         count(v).as(s"${c}_nonnans"))
     }
@@ -45,7 +42,7 @@ object StatsOps {
     // long-grid fast sum: weights are 1.0 (or caller-audited small) —
     // far inside the 4.6e12 envelope
     val w = weight.map(col(_)).getOrElse(lit(1.0))
-    df.groupBy(col(c)).agg(exactSumFast(w).as("freq")).orderBy(col(c))
+    df.groupBy(col(c)).agg(grid6(w).as("freq")).orderBy(col(c))
   }
 
   /** Contingency: counts over a (rowVar, colVar) pair, long form —
@@ -76,15 +73,6 @@ object StatsOps {
       .withColumn("chisq",
         round(pow(col("n") - e, 2) / e, 6))
       .orderBy(col(rowVar), col(colVar))
-  }
-
-  /** Pairwise Pearson correlation for the given column pairs in ONE
-    * aggregation pass (owcorrelations.py:266). */
-  def correlationPairs(df: DataFrame, pairs: Seq[(String, String)]): DataFrame = {
-    val aggs = pairs.map { case (a, b) =>
-      exactCorr(col(a), col(b)).as(s"corr_${a}_$b")
-    }
-    df.agg(aggs.head, aggs.tail: _*)
   }
 
   /** Benjamini–Hochberg FDR correction (statistics/util.py:757):

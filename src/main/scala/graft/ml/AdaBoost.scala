@@ -95,15 +95,6 @@ object AdaBoost {
     // — are bit-unchanged. Rounds outside the scaled envelope (or a
     // nullable y) fall back to the aggregate path.
     val kCand = cands.size
-    // Math.round (post-JDK-8041734) is exact half-up on the double's real
-    // value — no floor(t+0.5) double-rounding at 0.49999999999999994 and
-    // no ties-to-even drift when boosted weights push t past 2^52;
-    // negated for t < 0 it is HALF_UP away from zero, matching DuckDB's
-    // std::round-based ROUND and Spark round()'s BigDecimal HALF_UP.
-    def roundScaled(v: Double): Long = {
-      val t = v * 1e12
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
     // Every cached value is ±1 by construction (stump outputs and the
     // {−1,+1} label), so the cache is a packed SIGN bitset — bit set ↔
     // +1.0 — at ⌈(K+1)/64⌉ longs per row instead of K+1 doubles. At the
@@ -153,31 +144,19 @@ object AdaBoost {
       r
     }
     var hArrUsed = false
-    // Exact scaled-long accumulation with NO row-count envelope: the
-    // per-partition long accumulators spill into BigIntegers whenever
-    // they approach the long range, so Σ round12(term)·10¹² is exact at
-    // ANY n (integer addition is order-independent). The final value is
-    // bigTotal→double (correctly rounded, like DuckDB's HUGEINT→DOUBLE
-    // cast of its overflow-free SUM(BIGINT)) divided by 1e12 — the same
-    // two-step rounding both the previous long path and the oracle's
-    // fast branch perform, so previously-in-envelope trajectories are
-    // bit-unchanged. (The old n·B ≤ 8·10⁶ guard silently excluded the
-    // sf1 replica and pushed every round onto 7 DECIMAL(38) sums over
-    // 6M rows — a 47× cliff for an algorithm that is one scan per
-    // round.)
+    // Exact scaled-long accumulation with NO row-count envelope
+    // (core.ScaledLongSums, exact at ANY n and correctly rounded like the
+    // oracle's sqlScaledLongSum). The old n·B ≤ 8·10⁶ guard silently
+    // excluded the sf1 replica and pushed every round onto 7 DECIMAL(38)
+    // sums over 6M rows — a 47× cliff for an algorithm that is one scan
+    // per round.
     def jvmRoundSums(ks: Array[Int], as: Array[Double]): Array[Double] = {
       hArrUsed = true
       val kk = kCand; val rr = rounds
       val bc = spark.sparkContext.broadcast((ks, as))
-      val SpillAt = Long.MaxValue >> 1
-      val acc = hArr.mapPartitions { it =>
+      val sums = hArr.mapPartitions { it =>
         val (bks, bas) = bc.value
-        val a = new Array[Long](kk + 1)
-        val big = Array.fill(kk + 1)(java.math.BigInteger.ZERO)
-        def spill(i: Int): Unit = {
-          big(i) = big(i).add(java.math.BigInteger.valueOf(a(i)))
-          a(i) = 0L
-        }
+        val a = new graft.core.ScaledLongSums(kk + 1)
         val nw = (kk + 1 + 63) >> 6
         while (it.hasNext) {
           val ch = it.next(); val m = ch.length / nw
@@ -192,30 +171,22 @@ object AdaBoost {
               j += 1
             }
             val w = Math.exp(if (yb) -f else f)
-            val rw = roundScaled(w)
-            a(0) += rw
-            if (a(0) > SpillAt || a(0) < -SpillAt) spill(0)
+            val rw = graft.core.ScaledLongSums.scale(w)
+            a.addScaled(0, rw)
             // w·(1−y·h_k)/2 is exactly w when y ≠ h_k and +0.0 when
             // equal, so the candidate term reuses the already-rounded rw
             var k = 0
             while (k < kk) {
-              if (bit(ch, off, k) != yb) {
-                a(k + 1) += rw
-                if (a(k + 1) > SpillAt || a(k + 1) < -SpillAt) spill(k + 1)
-              }
+              if (bit(ch, off, k) != yb) a.addScaled(k + 1, rw)
               k += 1
             }
             ri += 1
           }
         }
-        var i = 0
-        while (i <= kk) { spill(i); i += 1 }
-        Iterator.single(big)
-      }.treeReduce { (p, q) =>
-        var i = 0; while (i <= kk) { p(i) = p(i).add(q(i)); i += 1 }; p
-      }
+        Iterator.single(a)
+      }.treeReduce(_ merge _)
       bc.destroy()
-      acc.map(_.doubleValue() / 1e12)
+      sums.result
     }
     def paddedKA: (Array[Int], Array[Double]) = {
       val ks = Array.fill(rounds)(-1); val as = Array.fill(rounds)(0.0)
@@ -337,9 +308,7 @@ object AdaBoost {
     // B = ROUND(EXP(Σ|alpha|), 6) (6-decimal rounding makes both
     // engines' libm exp() agree on the branch). Per-TERM bound only —
     // DuckDB's SUM(BIGINT) accumulates in HUGEINT, so like the Spark
-    // side's BigInteger spill the sum is exact at any row count; the
-    // fast value is CAST(sum AS DOUBLE)/1e12, the same int→double→÷
-    // rounding sequence as BigInteger.doubleValue()/1e12
+    // side's ScaledLongSums the sum is exact at any row count
     def envSql(r: Int): String = {
       // sel_j are 1-row CTEs; MIN() keeps the aggregate context valid
       val sumAbs = if (r <= 1) "0.0"
@@ -348,18 +317,9 @@ object AdaBoost {
         s"ROUND(EXP($sumAbs), 6) <= 8000 AS safe " +
         s"FROM $table${selJoins(r - 1)})"
     }
-    def gSumSql(t: String, r: Int): String = {
-      // HUGEINT→VARCHAR→DOUBLE, not HUGEINT→DOUBLE: DuckDB's direct cast
-      // composes double(lower) + double(upper)·2⁶⁴ (double-rounded, can
-      // differ from Java's correctly-rounded BigInteger.doubleValue() by
-      // 1 ulp once the exact sum exceeds 2⁶³). The decimal-string parse
-      // is correctly rounded, so both engines produce the identical
-      // double at ANY magnitude; for sums < 2⁶³ it equals the old direct
-      // cast bit-for-bit.
-      val fast =
-        s"(CAST(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS VARCHAR) AS DOUBLE) / 1e12)"
-      s"(CASE WHEN (SELECT safe FROM env_$r) THEN $fast ELSE ${sqlDetSum(t)} END)"
-    }
+    def gSumSql(t: String, r: Int): String =
+      s"(CASE WHEN (SELECT safe FROM env_$r) THEN ${sqlScaledLongSum(t)} " +
+        s"ELSE ${sqlDetSum(t)} END)"
     val roundCtes = (1 to rounds).map { r =>
       val w = s"EXP(-($ySql) * (${fSql(r - 1)}))"
       val errCols = cands.zipWithIndex.map { case (c, k) =>

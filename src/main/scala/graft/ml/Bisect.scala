@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.queries.SqlGen.sqlScaledLongSum
 
 /** Deterministic bisecting (divisive) k-means — reference
   * Orange/clustering/hierarchical.py's divisive complement, surfaced in
@@ -35,9 +36,6 @@ object Bisect {
       max(greatest(feats.map { case (n, _) => abs(col(s"x_$n")) }: _*)))
       .head().getDouble(0)
     require(maxAbs <= 1.0, s"bisect envelope: max|x|=$maxAbs (pre-scale)")
-    // exact split-radix sum — overflow-proof to 2⁴² rows/cluster at
-    // long speed (see Tables.scaledLongSum)
-    def scaledSum(c: Column): Column = graft.core.Tables.scaledLongSum(c)
     def r10(v: Double): Double = {
       val p = v * 1e10
       (if (p >= 0) math.floor(p + 0.5) else math.ceil(p - 0.5)) / 1e10
@@ -64,7 +62,8 @@ object Bisect {
           when(dOf(cFix, 0) <= dOf(cFix, 1), 0).otherwise(1).as("child") +:
             feats.map { case (n, _) => col(s"x_$n") }: _*)
         val aggs = count(lit(1)).as("n") +:
-          feats.map { case (n, _) => scaledSum(col(s"x_$n")).as(s"s_$n") }
+          feats.map { case (n, _) =>
+            graft.core.Tables.scaledLongSum(col(s"x_$n")).as(s"s_$n") }
         val upd = asgIt.groupBy("child").agg(aggs.head, aggs.tail: _*)
           .collect().map { r =>
             (r.getInt(0),
@@ -102,8 +101,6 @@ object Bisect {
              k: Int, iterations: Int): String = {
     val d = featsSql.size
     val names = featsSql.map(_._1)
-    def scaledSum(t: String) =
-      s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS BIGINT) / 1e12)"
     def cc(s: Int, it: Int, c: Int, j: Int) = s"c${s}_${it}_${c}_$j"
     def distExpr(s: Int, it: Int, c: Int, pre: String = "") =
       (0 until d).map { j =>
@@ -137,7 +134,7 @@ object Bisect {
            |  FROM mem_$s CROSS JOIN ct_${s}_$p),
            |gr_${s}_$it AS (
            |  SELECT child, COUNT(*) AS n,
-           |    ${names.map(n => s"${scaledSum(s"x_$n")} AS s_$n")
+           |    ${names.map(n => s"${sqlScaledLongSum(s"x_$n")} AS s_$n")
                .mkString(", ")}
            |  FROM ai_${s}_$it GROUP BY child),
            |ct_${s}_$it AS MATERIALIZED (

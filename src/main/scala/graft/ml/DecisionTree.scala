@@ -11,8 +11,7 @@ import graft.queries.SqlGen._
   * discretized inputs; multiway ID3-style splits on entropy, which is
   * what Orange's tree does for discrete attributes).
   *
-  * Unlike the MLlib CART wrapper (MLlibLearners.decisionTree, kept for
-  * the forest/GBT family), the induction here is expressed as pure
+  * Unlike an MLlib CART, the induction here is expressed as pure
   * contingency algebra so it is oracle-verifiable:
   *
   *  - level 1: ONE map-side-combined groupBy builds the (feature, value,
@@ -244,9 +243,9 @@ object DecisionTree {
     // 2-scan induction, 32.6 s cold; r16 plan audit).
     val mom1all = long1
       .groupBy(col("fname"), col("fval"))
-      // exactSumFast grid: |yy| is a fixture column ≤ money scale
+      // long grid: |yy| is a fixture column ≤ money scale
       // (≪ 2.25e9) — this is the per-row corpus agg of the induction
-      .agg(count(lit(1)).as("nv"), exactSumFast(col("yy")).as("sv"))
+      .agg(count(lit(1)).as("nv"), grid6(col("yy")).as("sv"))
       .localCheckpoint(true)
     val mom1 = mom1all.filter(col("fval").isNotNull)
     // |base| = Σ nv over any one feature's groups (nulls included)
@@ -286,7 +285,7 @@ object DecisionTree {
     val mom2all = long2
       .groupBy(col("root_feat"), col("root_val"), col("fname"),
         col("fval"))
-      .agg(count(lit(1)).as("nv"), exactSumFast(col("yy")).as("sv"))
+      .agg(count(lit(1)).as("nv"), grid6(col("yy")).as("sv"))
       .localCheckpoint(true)
     val mom2 = mom2all.filter(col("fval").isNotNull)
     // every base2 row contributes exactly (|feats|−1) long2 rows, so

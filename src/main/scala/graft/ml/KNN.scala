@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** k-nearest-neighbor classification and regression (reference
   * Orange/classification/knn.py and Orange/regression/knn.py — sklearn
@@ -188,8 +187,7 @@ object KNN {
       train.select(col(id).as("__rid"), col(target).cast("double").as("__y")),
       "__rid")
     nnWithY.groupBy(col("__tid"))
-      .agg((sum(col("__y").cast(DecimalType(38, 6))).cast(DoubleType) /
-        count(lit(1))).as("prediction"))
+      .agg((graft.core.Tables.exactSum(col("__y")) / count(lit(1))).as("prediction"))
       .select(col("__tid").as(id), col("prediction"))
   }
 

@@ -3,7 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
+import graft.core.Tables.{detSum, exactMean, exactSum}
 
 /** Orange's uniform Learner/Model API (reference Orange/base.py:43-513:
   * `Learner(Table) → Model`, `Model(data) → predictions`) over Spark.
@@ -14,8 +15,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *    Majority; MeanRegressor): the "model" is a small DataFrame of
   *    parameters, prediction is a broadcast join + scalar expressions —
   *    fully distributed, no iteration, oracle-verifiable.
-  *  - MLlib-backed learners (logistic regression, kmeans, PCA, trees…):
-  *    thin adapters in MLlibLearners.
+  *  - the MLlib-backed softmax on embeddings: a thin adapter in
+  *    MLlibLearners.
   *  - evaluation: metric expressions + hash-based k-fold CV.
   */
 object Learners {
@@ -38,8 +39,7 @@ object Learners {
   /** Mean regressor (Orange/regression/mean.py). */
   final case class MeanRegressor(target: String) extends Learner {
     def fit(train: DataFrame): Model = {
-      val m = train.agg((sum(col(target).cast(DecimalType(38, 6)))
-        .cast(DoubleType) / count(col(target))).as("__mean"))
+      val m = train.agg(exactMean(col(target)).as("__mean"))
       df => df.crossJoin(broadcast(m)).withColumn("prediction", col("__mean"))
         .drop("__mean")
     }
@@ -149,34 +149,30 @@ object Learners {
     def logLoss(isPos: Column, p: Column): Column = {
       val eps = 1e-15
       val pc = least(greatest(p, lit(eps)), lit(1.0 - eps))
-      -sum(round(when(isPos, log(pc)).otherwise(log(lit(1.0) - pc)), 12)
-        .cast(DecimalType(38, 14))).cast(DoubleType) / count(lit(1))
+      -detSum(when(isPos, log(pc)).otherwise(log(lit(1.0) - pc))) / count(lit(1))
     }
 
     /** Regression metrics (scoring.py:403-461) via exact decimal sums. */
-    private def dsum(c: Column) = sum(c.cast(DecimalType(38, 6))).cast(DoubleType)
     def mse(actual: Column, pred: Column): Column =
-      dsum((actual - pred) * (actual - pred)) / count(lit(1))
+      exactSum((actual - pred) * (actual - pred)) / count(lit(1))
     def rmse(actual: Column, pred: Column): Column = sqrt(mse(actual, pred))
     def mae(actual: Column, pred: Column): Column =
-      dsum(abs(actual - pred)) / count(lit(1))
+      exactSum(abs(actual - pred)) / count(lit(1))
     def r2(actual: Column, pred: Column): Column = {
-      val ssRes = dsum((actual - pred) * (actual - pred))
-      val ssTot = dsum(actual * actual) - dsum(actual) * dsum(actual) / count(lit(1))
+      val ssRes = exactSum((actual - pred) * (actual - pred))
+      val ssTot = exactSum(actual * actual) - exactSum(actual) * exactSum(actual) / count(lit(1))
       lit(1.0) - ssRes / ssTot
     }
 
     /** MAPE / SMAPE / CV(RMSE) (scoring.py:403-461). Per-row ratio terms
       * go through the rounded-decimal sum so engines agree. */
-    private def rsum(c: Column) =
-      sum(round(c, 12).cast(DecimalType(38, 14))).cast(DoubleType)
     def mape(actual: Column, pred: Column): Column =
-      rsum(abs((actual - pred) / actual)) / count(lit(1))
+      detSum(abs((actual - pred) / actual)) / count(lit(1))
     def smape(actual: Column, pred: Column): Column =
-      rsum(lit(2.0) * abs(actual - pred) / (abs(actual) + abs(pred))) /
+      detSum(lit(2.0) * abs(actual - pred) / (abs(actual) + abs(pred))) /
         count(lit(1))
     def cvrmse(actual: Column, pred: Column): Column =
-      rmse(actual, pred) / (dsum(actual) / count(lit(1)))
+      rmse(actual, pred) / (exactSum(actual) / count(lit(1)))
 
     /** ROC AUC from a real-valued score, positives vs the rest
       * (scoring.py:226, sklearn roc_auc_score) — the Mann–Whitney rank
@@ -310,8 +306,7 @@ object Learners {
                          bins: Int): DataFrame = {
       val bin = least(floor(p * bins).cast("long"), lit(bins - 1L))
       df.groupBy(bin.as("bin")).agg(
-          round(sum(round(p, 12).cast(DecimalType(38, 14)))
-            .cast(DoubleType) / count(lit(1)), 6).as("mean_pred"),
+          round(detSum(p) / count(lit(1)), 6).as("mean_pred"),
           round(sum(when(isPos, 1L).otherwise(0L)).cast(DoubleType) /
             count(lit(1)), 6).as("frac_pos"),
           count(lit(1)).as("n"))

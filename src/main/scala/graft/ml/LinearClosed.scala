@@ -20,7 +20,7 @@ import graft.queries.SqlGen._
   * same catastrophic-cancellation-safe shape the ANOVA scorer uses:
   * centered product terms are O(spread²) and survive the 12-decimal
   * deterministic-sum grid at any row count. Callers pre-scale features
-  * to ~[0,1] like the GD learners do — which also licenses detSumFast
+  * to ~[0,1] like the GD learners do — which also licenses the scale-12 grid
   * (all terms ≤ O(1) ≪ the 2⁵¹/10¹² ≈ 2.2·10³ long-grid bound).
   *
   * Scale shape: pass 1 = one map-side-combined agg (means), pass 2 = one
@@ -37,16 +37,16 @@ object LinearClosed {
              y: Column, alpha: Double): DataFrame = {
     val base = df.select(f1._2.as("x1"), f2._2.as("x2"), y.cast("double").as("yy"))
     val means = base.agg(
-      (detSumFast(col("x1")) / count(lit(1))).as("m1"),
-      (detSumFast(col("x2")) / count(lit(1))).as("m2"),
-      (detSumFast(col("yy")) / count(lit(1))).as("my"))
+      (gridSum(col("x1"), 12) / count(lit(1))).as("m1"),
+      (gridSum(col("x2"), 12) / count(lit(1))).as("m2"),
+      (gridSum(col("yy"), 12) / count(lit(1))).as("my"))
     val c = base.crossJoin(broadcast(means))
     val d1 = col("x1") - col("m1"); val d2 = col("x2") - col("m2")
     val dy = col("yy") - col("my")
     val mom = c.agg(
-      detSumFast(d1 * d1).as("s11"), detSumFast(d2 * d2).as("s22"),
-      detSumFast(d1 * d2).as("s12"),
-      detSumFast(d1 * dy).as("s1y"), detSumFast(d2 * dy).as("s2y"),
+      gridSum(d1 * d1, 12).as("s11"), gridSum(d2 * d2, 12).as("s22"),
+      gridSum(d1 * d2, 12).as("s12"),
+      gridSum(d1 * dy, 12).as("s1y"), gridSum(d2 * dy, 12).as("s2y"),
       max(col("m1")).as("m1"), max(col("m2")).as("m2"), max(col("my")).as("my"))
     val a11 = col("s11") + alpha; val a22 = col("s22") + alpha
     val det = a11 * a22 - col("s12") * col("s12")
@@ -103,12 +103,12 @@ object LinearClosed {
                  l1Ratio: Double): DataFrame = {
     val base = df.select(feat._2.as("x"), y.cast("double").as("yy"))
     val means = base.agg(
-      (detSumFast(col("x")) / count(lit(1))).as("mx"),
-      (detSumFast(col("yy")) / count(lit(1))).as("my"), count(lit(1)).as("n"))
+      (gridSum(col("x"), 12) / count(lit(1))).as("mx"),
+      (gridSum(col("yy"), 12) / count(lit(1))).as("my"), count(lit(1)).as("n"))
     val c = base.crossJoin(broadcast(means))
     val dx = col("x") - col("mx"); val dy = col("yy") - col("my")
     val mom = c.agg(
-      detSumFast(dx * dy).as("rho"), detSumFast(dx * dx).as("s"),
+      gridSum(dx * dy, 12).as("rho"), gridSum(dx * dx, 12).as("s"),
       max(col("mx")).as("mx"), max(col("my")).as("my"), max(col("n")).as("n"))
     def soft(z: Column, t: Double): Column =
       signum(z) * greatest(abs(z) - t, lit(0.0))
@@ -177,20 +177,20 @@ object LinearClosed {
     val base = df.select(f1._2.as("x1"), f2._2.as("x2"), f3._2.as("x3"),
       y.cast("double").as("yy"))
     val means = base.agg(
-      (detSumFast(col("x1")) / count(lit(1))).as("m1"),
-      (detSumFast(col("x2")) / count(lit(1))).as("m2"),
-      (detSumFast(col("x3")) / count(lit(1))).as("m3"),
-      (detSumFast(col("yy")) / count(lit(1))).as("my"),
+      (gridSum(col("x1"), 12) / count(lit(1))).as("m1"),
+      (gridSum(col("x2"), 12) / count(lit(1))).as("m2"),
+      (gridSum(col("x3"), 12) / count(lit(1))).as("m3"),
+      (gridSum(col("yy"), 12) / count(lit(1))).as("my"),
       count(lit(1)).as("n"))
     val c = base.crossJoin(broadcast(means))
     val d1 = col("x1") - col("m1"); val d2 = col("x2") - col("m2")
     val d3 = col("x3") - col("m3"); val dy = col("yy") - col("my")
     val mom = c.agg(
-      detSumFast(d1 * d1).as("s11"), detSumFast(d1 * d2).as("s12"),
-      detSumFast(d1 * d3).as("s13"), detSumFast(d2 * d2).as("s22"),
-      detSumFast(d2 * d3).as("s23"), detSumFast(d3 * d3).as("s33"),
-      detSumFast(d1 * dy).as("s1y"), detSumFast(d2 * dy).as("s2y"),
-      detSumFast(d3 * dy).as("s3y"), detSumFast(dy * dy).as("syy"),
+      gridSum(d1 * d1, 12).as("s11"), gridSum(d1 * d2, 12).as("s12"),
+      gridSum(d1 * d3, 12).as("s13"), gridSum(d2 * d2, 12).as("s22"),
+      gridSum(d2 * d3, 12).as("s23"), gridSum(d3 * d3, 12).as("s33"),
+      gridSum(d1 * dy, 12).as("s1y"), gridSum(d2 * dy, 12).as("s2y"),
+      gridSum(d3 * dy, 12).as("s3y"), gridSum(dy * dy, 12).as("syy"),
       max(col("m1")).as("m1"), max(col("m2")).as("m2"),
       max(col("m3")).as("m3"), max(col("my")).as("my"),
       max(col("n")).as("n"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.core.Tables
+import graft.queries.SqlGen.sqlScaledLongSum
 
 /** Deterministic Lloyd k-means (reference Orange/clustering/kmeans.py
   * KMeans — sklearn's n_init random restarts replaced by the
@@ -79,16 +80,13 @@ object Lloyd {
     def dsArr: Column = array((0 until k).map(distOf): _*)
     def clusterOf: Column =
       (array_position(dsArr, array_min(dsArr)) - 1).cast("int")
-    // exact split-radix sum — overflow-proof to 2⁴² rows/cluster at
-    // long speed (see Tables.scaledLongSum)
-    def scaledSum(c: Column): Column = Tables.scaledLongSum(c)
 
     for (_ <- 1 to iterations) {
       val asg = base.crossJoin(broadcast(centDF(cent)))
         .select(clusterOf.as("cluster") +:
           feats.map { case (n, _) => col(s"x_$n") }: _*)
       val aggs = count(lit(1)).as("n") +:
-        feats.map { case (n, _) => scaledSum(col(s"x_$n")).as(s"s_$n") }
+        feats.map { case (n, _) => Tables.scaledLongSum(col(s"x_$n")).as(s"s_$n") }
       val upd = asg.groupBy("cluster").agg(aggs.head, aggs.tail: _*)
         .collect().map { r =>
           (r.getInt(0),
@@ -111,7 +109,7 @@ object Lloyd {
     val inertiaTerm = element_at(col("__ds"), col("cluster") + 1)
     val grouped = asg.groupBy("cluster").agg(
       count(lit(1)).as("size"),
-      round(Tables.detSumFast(inertiaTerm), 6).as("inertia")) // terms ≤ 4·d ≪ the 2.2e3 fast-grid bound (|x| ≤ 1 envelope)
+      round(Tables.gridSum(inertiaTerm, 12), 6).as("inertia")) // terms ≤ 4·d ≪ the 2.2e3 fast-grid bound (|x| ≤ 1 envelope)
     val centCols = feats.zipWithIndex.map { case ((n, _), j) =>
       (0 until k - 1).foldRight(col(s"cc_${k - 1}_$j")) { (c, rest) =>
         when(col("cluster") === c, col(s"cc_${c}_$j")).otherwise(rest)
@@ -156,8 +154,6 @@ object Lloyd {
       }
       s"CASE ${arms.mkString(" ")} ELSE ${k - 1} END"
     }
-    def scaledSum(t: String) =
-      s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS BIGINT) / 1e12)"
     val steps = (1 to iterations).map { i =>
       val p = i - 1
       val dAliases = (0 until k).map(c => s"${distExpr(p, c)} AS dd_$c")
@@ -168,7 +164,7 @@ object Lloyd {
          |  FROM feats CROSS JOIN cent$p),
          |grp$i AS (
          |  SELECT cluster, COUNT(*) AS n,
-         |    ${names.map(n => s"${scaledSum(s"x_$n")} AS s_$n").mkString(", ")}
+         |    ${names.map(n => s"${sqlScaledLongSum(s"x_$n")} AS s_$n").mkString(", ")}
          |  FROM asg$i GROUP BY cluster),
          |cent$i AS MATERIALIZED (
          |  SELECT ${(0 until k).flatMap(c => (0 until d).map(j =>

@@ -1,42 +1,21 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, LinearSVC, LogisticRegression, MultilayerPerceptronClassifier, RandomForestClassifier}
-import org.apache.spark.ml.clustering.{BisectingKMeans, KMeans}
-import org.apache.spark.ml.feature.{PCA, StandardScaler, StringIndexer, VectorAssembler}
+import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.LinearRegression
 
-/** MLlib adapters for the reference's learner inventory (SURVEY §2.11):
-  * distributed training equivalents of Orange's sklearn-backed learners.
+/** MLlib adapter for the reference's softmax learner (SURVEY §2.11).
   * Embedding columns (Array[Float]) are converted with array_to_vector —
   * a zero-copy expression, no UDF.
   *
-  * Seeds are fixed for reproducibility; results are still iterative-
-  * algorithm outputs, so their driver checks are rows-only (no SQL
-  * oracle), as allowed by the contract. */
+  * Results are iterative-algorithm outputs, so their checks are rows-only
+  * (no SQL oracle), as allowed by the contract. */
 object MLlibLearners {
 
   private def withFeatures(df: DataFrame, arrayCol: String): DataFrame =
     df.withColumn("features",
       array_to_vector(col(arrayCol).cast("array<double>")))
-
-  /** Multinomial logistic regression on an embedding column; returns
-    * per-class prediction counts + training accuracy. */
-  def logisticOnEmbeddings(df: DataFrame, arrayCol: String,
-                           labelCol: String): DataFrame = {
-    val data = withFeatures(df, arrayCol)
-      .withColumn("label", col(labelCol).cast("double"))
-    val model = new LogisticRegression()
-      .setMaxIter(50).setRegParam(0.01).setTol(1e-6)
-      .fit(data)
-    model.transform(data)
-      .groupBy(col("label"), col("prediction"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("label"), col("prediction"))
-  }
 
   /** Softmax regression (Orange/classification/softmax_regression.py:
     * multinomial logistic with L2 penalty, L-BFGS) — MLlib
@@ -55,148 +34,5 @@ object MLlibLearners {
       .groupBy(col("label"), col("prediction"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("label"), col("prediction"))
-  }
-
-  /** Seeded KMeans over embeddings → cluster sizes + WSSD. */
-  def kmeansOnEmbeddings(df: DataFrame, arrayCol: String, k: Int,
-                         seed: Long = 42L): DataFrame = {
-    val data = withFeatures(df, arrayCol)
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(20).fit(data)
-    model.transform(data)
-      .groupBy(col("prediction").as("cluster"))
-      .agg(count(lit(1)).as("size"))
-      .orderBy(col("cluster"))
-  }
-
-  /** Tabular features → vector + 0-based label index (alphabetical, so
-    * deterministic — StringIndexer by alphabetDesc would flip; use
-    * alphabetAsc). Shared prep for the tree-family learners. */
-  private def assembled(df: DataFrame, features: Seq[String],
-                        labelCol: String): DataFrame = {
-    val vec = new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("features").transform(df)
-    new StringIndexer().setInputCol(labelCol).setOutputCol("label")
-      .setStringOrderType("alphabetAsc").fit(vec).transform(vec)
-  }
-
-  private def confusion(scored: DataFrame): DataFrame =
-    scored.groupBy(col("label"), col("prediction"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("label"), col("prediction"))
-
-  /** DecisionTreeClassifier (reference Orange/classification/tree.py →
-    * MLlib distributed CART): confusion counts on the training set. */
-  def decisionTree(df: DataFrame, features: Seq[String], labelCol: String,
-                   maxDepth: Int = 5, seed: Long = 42L): DataFrame = {
-    val data = assembled(df, features, labelCol)
-    val model = new DecisionTreeClassifier()
-      .setMaxDepth(maxDepth).setSeed(seed).fit(data)
-    confusion(model.transform(data))
-  }
-
-  /** RandomForestClassifier (random_forest.py → MLlib). */
-  def randomForest(df: DataFrame, features: Seq[String], labelCol: String,
-                   numTrees: Int = 10, seed: Long = 42L): DataFrame = {
-    val data = assembled(df, features, labelCol)
-    val model = new RandomForestClassifier()
-      .setNumTrees(numTrees).setMaxDepth(5).setSeed(seed).fit(data)
-    confusion(model.transform(data))
-  }
-
-  /** GBTClassifier (gb.py/xgb → MLlib gradient-boosted trees); binary
-    * labels only. */
-  def gbt(df: DataFrame, features: Seq[String], labelCol: String,
-          maxIter: Int = 5, seed: Long = 42L): DataFrame = {
-    val data = assembled(df, features, labelCol)
-    val model = new GBTClassifier()
-      .setMaxIter(maxIter).setMaxDepth(3).setSeed(seed).fit(data)
-    confusion(model.transform(data))
-  }
-
-  /** XGBoost/CatBoost adapter parity (reference classification/xgb.py
-    * XGBBase and catgb.py CatGBBaseLearner wrap the external boosters'
-    * hyperparameters): MLlib GBT is the Spark-native booster, and this
-    * adapter maps the same surface — n_estimators→maxIter,
-    * learning_rate→stepSize (xgb default 0.3), max_depth,
-    * subsample→subsamplingRate, colsample_bytree→featureSubsetStrategy.
-    * Same confusion-matrix contract as [[gbt]]. */
-  def gbtTuned(df: DataFrame, features: Seq[String], labelCol: String,
-               nEstimators: Int = 10, learningRate: Double = 0.3,
-               maxDepth: Int = 3, subsample: Double = 0.8,
-               colsampleByTree: Double = 1.0,
-               seed: Long = 42L): DataFrame = {
-    val data = assembled(df, features, labelCol)
-    val strategy =
-      if (colsampleByTree >= 1.0) "all" else colsampleByTree.toString
-    val model = new GBTClassifier()
-      .setMaxIter(nEstimators).setStepSize(learningRate)
-      .setMaxDepth(maxDepth).setSubsamplingRate(subsample)
-      .setFeatureSubsetStrategy(strategy)
-      .setSeed(seed).fit(data)
-    confusion(model.transform(data))
-  }
-
-  /** LinearSVC (svm.py → MLlib linear SVM); binary labels only. */
-  def linearSvc(df: DataFrame, features: Seq[String],
-                labelCol: String): DataFrame = {
-    val data = assembled(df, features, labelCol)
-    val model = new LinearSVC().setMaxIter(15).setRegParam(0.01).fit(data)
-    confusion(model.transform(data))
-  }
-
-  /** LinearRegression (regression/linear.py → MLlib): returns the fitted
-    * coefficients + intercept + training RMSE, rounded — the normal-
-    * equation solver is deterministic for small feature counts. */
-  def linearRegression(df: DataFrame, features: Seq[String],
-                       labelCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val data = new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("features")
-      .transform(df.withColumn("label", col(labelCol).cast("double")))
-    val model = new LinearRegression().setSolver("normal").fit(data)
-    val coefs = features.zip(model.coefficients.toArray)
-      .map { case (f, c) => (f, math.rint(c * 1e6) / 1e6) }
-    (coefs :+ (("__intercept", math.rint(model.intercept * 1e6) / 1e6))
-           :+ (("__rmse", math.rint(model.summary.rootMeanSquaredError * 1e4) / 1e4)))
-      .toDF("term", "value")
-  }
-
-  /** MultilayerPerceptronClassifier (neural_network.py MLP → MLlib):
-    * input width read from the data, hidden layers as given. */
-  def mlpOnEmbeddings(df: DataFrame, arrayCol: String, labelCol: String,
-                      hidden: Seq[Int], seed: Long = 42L): DataFrame = {
-    val data = withFeatures(df, arrayCol)
-      .withColumn("label", col(labelCol).cast("double"))
-    val nIn = data.select("features").head.getAs[Vector](0).size
-    val nOut = data.select(countDistinct(col("label"))).head.getLong(0).toInt
-    val layers = (nIn +: hidden :+ nOut).toArray
-    val model = new MultilayerPerceptronClassifier()
-      .setLayers(layers).setSeed(seed).setMaxIter(30).fit(data)
-    confusion(model.transform(data))
-  }
-
-  /** BisectingKMeans — MLlib's scalable divisive-hierarchical clustering,
-    * the distributed analogue of Orange/clustering/hierarchical.py. */
-  def bisectingKmeansOnEmbeddings(df: DataFrame, arrayCol: String, k: Int,
-                                  seed: Long = 42L): DataFrame = {
-    val data = withFeatures(df, arrayCol)
-    val model = new BisectingKMeans().setK(k).setSeed(seed).fit(data)
-    model.transform(data)
-      .groupBy(col("prediction").as("cluster"))
-      .agg(count(lit(1)).as("size"))
-      .orderBy(col("cluster"))
-  }
-
-  /** PCA: top-k explained variance (projection family, SURVEY §2.11). */
-  def pcaExplainedVariance(df: DataFrame, arrayCol: String, k: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val data = withFeatures(df, arrayCol)
-    val model = new PCA().setK(k).setInputCol("features")
-      .setOutputCol("pca").fit(data)
-    model.explainedVariance.toArray.toSeq.zipWithIndex
-      .map { case (v, i) => (i, v) }
-      .toDF("component", "explained_variance")
   }
 }

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
+import graft.queries.SqlGen.{sqlDetSum, sqlScaledLongSum}
 
 /** Gradient-descent linear models (reference Orange/classification/sgd.py
   * and Orange/regression/svm.py — sklearn SGDClassifier/SGDRegressor/
@@ -230,19 +231,6 @@ object SGD {
     // a single aggregate with k+1 expressions exceeds the codegen field
     // cap, so HashAggregate silently drops to interpreted per-expression
     // eval (measured 16 s/iteration at k=64, sf0.1 vs ~0.2 s here).
-    // Math.round (post-JDK-8041734) is EXACT half-up-toward-+inf on the
-    // real value of the double — no floor(t+0.5) double-rounding bump at
-    // 0.49999999999999994 and no ties-to-even drift at |t| ≥ 2^52;
-    // negating for t < 0 gives HALF_UP away from zero, matching Spark
-    // round()'s BigDecimal convention. (Residual divergence class: Spark
-    // rounds the SHORTEST decimal repr, DuckDB ROUND goes through
-    // floating-point ×10^s — a product landing within 1 ulp of an exact
-    // .5 grid line can still split engines; the [0,1] pre-scaling
-    // convention keeps per-term error far below the 1e-12 grid.)
-    def roundScaled(v: Double): Long = {
-      val t = v * 1e12
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
     // Row.getDouble reads a NULL as 0.0 silently — count nulls while
     // building the cache so the wide path can VERIFY null-freedom
     // instead of assuming the caller pre-dropped them (task retries can
@@ -371,24 +359,20 @@ object SGD {
     // DECIMAL fallback for 30 interpreted passes over 60M rows):
     // |r·x| ≤ 1 keeps round(t·10¹²) exact in a double at ANY row count;
     // accumulator overflow — the real reason the old 8·10⁶ row cap
-    // existed — is gone because the JVM path spills its per-partition
-    // longs into BigIntegers and the aggregate path sums the scaled
-    // longs in DECIMAL(38,0) (exact, order-independent). The oracle's
-    // fast branch is already overflow-free (DuckDB SUM(BIGINT)
-    // accumulates in HUGEINT); its env predicate drops the row clause
-    // in lockstep.
+    // existed — is gone because both paths sum the scaled longs exactly
+    // (core.ScaledLongSums on the JVM, Tables.scaledLongSum in the
+    // aggregate). The oracle's fast branch is overflow-free too (DuckDB
+    // SUM(BIGINT) accumulates in HUGEINT); its env predicate drops the
+    // row clause in lockstep.
     val scaledSafe = nRows > 0 && maxAbs <= 1.0
     def gradSum(c: Column): Column =
-      if (scaledSafe)
-        (sum(round(c * 1e12, 0).cast("long").cast("decimal(38,0)"))
-          .cast("double") / lit(1e12)).cast("double")
-      else detSum(c)
+      if (scaledSafe) scaledLongSum(c) else detSum(c)
 
     // The JVM gradient accumulates the SAME scaled-long sums
     // partition-locally (long addition is associative, so it is
     // partition-order independent exactly like the sum-of-rounded-longs
-    // aggregate; roundScaled matches Spark round()'s HALF_UP away from
-    // zero, and the dot product adds terms before the intercept in the
+    // aggregate; ScaledLongSums.scale matches Spark round()'s HALF_UP away
+    // from zero, and the dot product adds terms before the intercept in the
     // exact order of the Column expression). Narrow fits use it too —
     // the per-iteration DataFrame agg costs ~1 s in scheduling/codegen
     // overhead vs ~0.2 s here — but only when the features are verified
@@ -402,20 +386,12 @@ object SGD {
       val kk = k; val ll = loss
       val ex = passExpand
       val bw = spark.sparkContext.broadcast(w)
-      // long accumulators with BigInteger spill (AdaBoost's device):
-      // integer addition stays order-independent and the sum exact at
-      // ANY row count — the fixed-point grid, not the row count, is the
-      // envelope
-      val SpillAt = Long.MaxValue >> 1
-      val acc = arrRdd.mapPartitions { it0 =>
+      // exact at ANY row count — the fixed-point grid, not the row
+      // count, is the envelope
+      val sums = arrRdd.mapPartitions { it0 =>
         val it = ex.fold(it0)(f => it0.map(f))
         val ww = bw.value
-        val a = new Array[Long](kk + 1)
-        val big = Array.fill(kk + 1)(java.math.BigInteger.ZERO)
-        def spill(i: Int): Unit = {
-          big(i) = big(i).add(java.math.BigInteger.valueOf(a(i)))
-          a(i) = 0L
-        }
+        val a = new graft.core.ScaledLongSums(kk + 1)
         val stride = kk + 1
         while (it.hasNext) {
           val ch = it.next(); val m = ch.length / stride
@@ -428,27 +404,16 @@ object SGD {
             val r = ll.residualJvm(z, ch(off + kk))
             if (r != 0.0) {
               var j = 0
-              while (j < kk) {
-                a(j) += roundScaled(r * ch(off + j))
-                if (a(j) > SpillAt || a(j) < -SpillAt) spill(j)
-                j += 1
-              }
-              a(kk) += roundScaled(r)
-              if (a(kk) > SpillAt || a(kk) < -SpillAt) spill(kk)
+              while (j < kk) { a.add(j, r * ch(off + j)); j += 1 }
+              a.add(kk, r)
             }
             rr += 1
           }
         }
-        var i = 0
-        while (i <= kk) { spill(i); i += 1 }
-        Iterator.single(big)
-      }.treeReduce { (p, q) =>
-        var i = 0; while (i <= kk) { p(i) = p(i).add(q(i)); i += 1 }; p
-      }
+        Iterator.single(a)
+      }.treeReduce(_ merge _)
       bw.destroy()
-      // bigTotal → correctly-rounded double, then the grid division —
-      // the same two steps the oracle's HUGEINT SUM → DOUBLE cast does
-      acc.map(_.doubleValue() / 1e12)
+      sums.result
     }
 
     var w = Array.fill(k + 1)(0.0) // weights + intercept, zero init
@@ -536,16 +501,9 @@ object SGD {
     // check: the env CTE evaluates the same nRows/max|x| predicate the
     // Spark side pre-computes, so both engines pick the same branch —
     // scaled-long inside the envelope, detSum's DECIMAL(38,14) outside.
-    def scaledSum(t: String) = {
-      // HUGEINT sum → DOUBLE (correctly rounded), THEN the grid
-      // division — a BIGINT cast here would overflow past 2⁶³ where the
-      // Spark side's BigInteger spill keeps going
-      val fast =
-        s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12)"
-      val slow =
-        s"CAST(SUM(CAST(ROUND(($t), 12) AS DECIMAL(38,14))) AS DOUBLE)"
-      s"(CASE WHEN (SELECT safe FROM env) THEN $fast ELSE $slow END)"
-    }
+    def scaledSum(t: String) =
+      s"(CASE WHEN (SELECT safe FROM env) THEN ${sqlScaledLongSum(t)} " +
+        s"ELSE ${sqlDetSum(s"($t)")} END)"
     val names = featsSql.map(_._1)
     val wCols = names.map(n => s"w_$n") :+ "b"
     val init = wCols.map(c => s"CAST(0.0 AS DOUBLE) AS $c").mkString(", ")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.core.Tables._
+import graft.queries.SqlGen.sqlScaledLongSum
 
 /** Multinomial (softmax) regression (reference
   * Orange/classification/softmax_regression.py:11-101
@@ -100,28 +101,16 @@ object Softmax {
     require(maxAbs <= 1.0,
       s"softmax envelope: maxAbs=$maxAbs (pre-scale features to [-1,1])")
 
-    def roundScaled(v: Double): Long = {
-      val t = v * 1e12
-      if (t >= 0) Math.round(t) else -Math.round(-t)
-    }
-
     // θ[c][j], j = 0..k-1 weights, j = k intercept
     var theta = Array.fill(c, k + 1)(0.0)
     val nD = n.toDouble
     for (_ <- 1 to iterations) {
       val bw = spark.sparkContext.broadcast(theta)
       val kk = k; val cc = c
-      // long accumulators with BigInteger spill (SGD/AdaBoost device):
-      // exact at any row count, order-independent
-      val SpillAt = Long.MaxValue >> 1
+      // exact scaled-long sums at any row count, order-independent
       val g = arrRdd.mapPartitions { it =>
         val th = bw.value
-        val acc = new Array[Long](cc * (kk + 1))
-        val big = Array.fill(cc * (kk + 1))(java.math.BigInteger.ZERO)
-        def spill(i: Int): Unit = {
-          big(i) = big(i).add(java.math.BigInteger.valueOf(acc(i)))
-          acc(i) = 0L
-        }
+        val acc = new graft.core.ScaledLongSums(cc * (kk + 1))
         val z = new Array[Double](cc)
         val e = new Array[Double](cc)
         val stride = kk + 1
@@ -147,29 +136,18 @@ object Softmax {
             while (ci < cc) {
               val r = e(ci) / se - (if (yi == ci) 1.0 else 0.0)
               var j = 0
-              while (j < kk) {
-                val ix = ci * (kk + 1) + j
-                acc(ix) += roundScaled(r * ch(off + j))
-                if (acc(ix) > SpillAt || acc(ix) < -SpillAt) spill(ix)
-                j += 1
-              }
-              val ib = ci * (kk + 1) + kk
-              acc(ib) += roundScaled(r)
-              if (acc(ib) > SpillAt || acc(ib) < -SpillAt) spill(ib)
+              while (j < kk) { acc.add(ci * (kk + 1) + j, r * ch(off + j)); j += 1 }
+              acc.add(ci * (kk + 1) + kk, r)
               ci += 1
             }
             rr += 1
           }
         }
-        var i = 0
-        while (i < acc.length) { spill(i); i += 1 }
-        Iterator.single(big)
-      }.treeReduce { (a, b) =>
-        var i = 0; while (i < a.length) { a(i) = a(i).add(b(i)); i += 1 }; a
-      }
+        Iterator.single(acc)
+      }.treeReduce(_ merge _).result
       bw.destroy()
       theta = Array.tabulate(c, k + 1) { (ci, j) =>
-        val gs = g(ci * (k + 1) + j).doubleValue() / 1e12
+        val gs = g(ci * (k + 1) + j)
         math.rint((theta(ci)(j) - lr * (gs / nD + lambda * theta(ci)(j) / nD)) * 1e10) / 1e10
       }
     }
@@ -257,11 +235,6 @@ object Softmax {
     val init = (0 until c).flatMap(ci =>
       (0 to k).map(j => s"CAST(0.0 AS DOUBLE) AS ${w(ci, j)}"))
       .mkString(", ")
-    // HUGEINT sum → DOUBLE → grid division (matches the Spark side's
-    // BigInteger spill → doubleValue → ÷1e12; a BIGINT cast would
-    // overflow past 2⁶³)
-    def scaledSum(t: String) =
-      s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS DOUBLE) / 1e12)"
     // per-iteration: a probability CTE using DuckDB's lateral SELECT
     // aliases (z/e/se computed once per row), then the 1-row update CTE
     val steps = (1 to iterations).map { i =>
@@ -283,7 +256,7 @@ object Softmax {
       val upd = (0 until c).flatMap { ci =>
         (0 to k).map { j =>
           val term = if (j == k) s"r_$ci" else s"(r_$ci) * ${feat(j)}"
-          s"ROUND(MIN($prev.${w(ci, j)}) - $lr * (${scaledSum(term)} / COUNT(*)" +
+          s"ROUND(MIN($prev.${w(ci, j)}) - $lr * (${sqlScaledLongSum(term)} / COUNT(*)" +
             s" + ($lambda * MIN($prev.${w(ci, j)})) / COUNT(*)), 10) AS ${w(ci, j)}"
         }
       }

@@ -26,19 +26,16 @@ object GroupByOps {
 
   // --- the 17 aggregations (owgroupby.py:99-183) -------------------------
 
-  // *Exact moments ride the exactSumFast long grid (bit-identical to the
-  // decimal sums while |c|² < 2.25e9, i.e. |c| ≲ 4.7e4 — the only
-  // production caller aggregates l_quantity ≤ 51)
-  def meanExact(c: Column): Column          = exactMeanFast(c)
+  // *Exact moments ride the checked long grid (Tables.gridSum)
+  def meanExact(c: Column): Column          = exactMean(c, grid6)
   def medianExact(c: Column): Column        = round(percentile(c, lit(0.5)), 6)
   def q1Exact(c: Column): Column            = round(percentile(c, lit(0.25)), 6)
   def q3Exact(c: Column): Column            = round(percentile(c, lit(0.75)), 6)
-  def medianApprox(c: Column): Column       = percentile_approx(c, lit(0.5), lit(10000))
   def minAgg(c: Column): Column             = min(c)
   def maxAgg(c: Column): Column             = max(c)
-  def stdExact(c: Column): Column           = exactStdSampFast(c)
-  def varExact(c: Column): Column           = exactVarSampFast(c)
-  def sumExact(c: Column): Column           = exactSumFast(c)
+  def stdExact(c: Column): Column           = exactStdSamp(c, grid6, grid6)
+  def varExact(c: Column): Column           = exactVarSamp(c, grid6, grid6)
+  def sumExact(c: Column): Column           = grid6(c)
   def spanExact(c: Column): Column          = max(c) - min(c)
   def countDefined(c: Column): Column       = count(c)
   def countAll(): Column                    = count(lit(1))
@@ -59,9 +56,6 @@ object GroupByOps {
   /** "Random value" with a fixed seed: the value whose md5(key) is
     * smallest — deterministic, uniform-ish, single-pass. */
   def seededRandomValue(c: Column, key: Column): Column = min_by(c, md5(key))
-
-  /** Native approximate mode for the scale path. */
-  def modeApprox(c: Column): Column = mode(c)
 
   /** Deterministic mode: most frequent value of `valueCol` per group, ties
     * broken by smallest value. Needs a count sub-aggregation: groupBy

@@ -168,11 +168,13 @@ object OutlierOps {
   def mahalanobisND(df: DataFrame, features: Seq[String]): DataFrame = {
     val d = features.length
     require(d >= 1, "mahalanobisND needs at least one feature")
-    // exactSumFast grid: callers keep |fᵢ·fⱼ| < 2.25e9 (every caller
-    // feeds pre-scaled or sub-acctbal features; squares ≤ ~1.2e8)
-    val aggs = features.map(f => exactMeanFast(col(f)).as(s"__m_$f")) ++
+    // long grid for the means and cross products; the squares (i == j)
+    // stay decimal, since money-scale features leave the grid envelope
+    // there (extendedprice² ≈ 1.3e10)
+    val aggs = features.map(f => exactMean(col(f), grid6).as(s"__m_$f")) ++
       (for { i <- 0 until d; j <- i until d } yield
-        exactCovarSampFast(col(features(i)), col(features(j))).as(s"__c_${i}_$j"))
+        exactCovarSamp(col(features(i)), col(features(j)), grid6,
+          if (i == j) exactSum else grid6).as(s"__c_${i}_$j"))
     val row = df.agg(aggs.head, aggs.tail: _*).first()
     val means = features.map(f => row.getDouble(row.fieldIndex(s"__m_$f")))
     val cov = Array.ofDim[Double](d, d)

@@ -23,12 +23,6 @@ object ReshapeOps {
     tagged.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Domain-*intersection* concatenation: only columns common to all inputs. */
-  def concatIntersection(dfs: Seq[DataFrame]): DataFrame = {
-    val common = dfs.map(_.columns.toSet).reduce(_ intersect _).toSeq.sorted
-    dfs.map(_.select(common.map(col): _*)).reduce(_.union(_))
-  }
-
   sealed trait KeepWhich
   object KeepWhich {
     case object First extends KeepWhich;  case object Last extends KeepWhich
@@ -124,18 +118,5 @@ object ReshapeOps {
     def meanCols(cs: Seq[Column]): Column = cs.reduce(_ + _) / cs.length
     def minCols(cs: Seq[Column]): Column  = least(cs: _*)
     def maxCols(cs: Seq[Column]): Column  = greatest(cs: _*)
-    def prodCols(cs: Seq[Column]): Column = cs.reduce(_ * _)
-    /** Sample variance across columns within a row. */
-    def varCols(cs: Seq[Column]): Column = {
-      val n = cs.length
-      val m = meanCols(cs)
-      cs.map(c => (c - m) * (c - m)).reduce(_ + _) / (n - 1)
-    }
-    def medianCols(cs: Seq[Column]): Column = {
-      val arr = array_sort(array(cs: _*))
-      val n = cs.length
-      if (n % 2 == 1) element_at(arr, n / 2 + 1)
-      else (element_at(arr, n / 2) + element_at(arr, n / 2 + 1)) / 2
-    }
   }
 }

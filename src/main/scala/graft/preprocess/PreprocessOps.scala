@@ -465,7 +465,7 @@ object PreprocessOps {
   /** ReplaceUnknowns with the column mean (impute.py:96): fit + broadcast
     * + coalesce. */
   def imputeMean(df: DataFrame, c: String, out: String): DataFrame =
-    withStats(df, Seq(exactMeanFast(col(c)).as("__mean")))
+    withStats(df, Seq(exactMean(col(c), grid6).as("__mean")))
       .withColumn(out, coalesce(col(c), col("__mean")))
       .drop("__mean")
 
@@ -486,7 +486,7 @@ object PreprocessOps {
   def imputeModelGroupMean(df: DataFrame, c: String, by: String,
                            out: String): DataFrame = {
     val fitted = df.groupBy(col(by))
-      .agg(exactMeanFast(col(c)).as("__pred"))
+      .agg(exactMean(col(c), grid6).as("__pred"))
     df.join(broadcast(fitted), Seq(by), "left")
       .withColumn(out, coalesce(col(c), col("__pred")))
       .drop("__pred")
@@ -530,10 +530,11 @@ object PreprocessOps {
   /** Z-score standardization (center by mean, scale by sample SD). */
   def normalizeBySD(df: DataFrame, c: String, out: String,
                     center: Boolean = true): DataFrame = {
-    // exactSumFast grid: normalize callers feed acctbal-scale columns
+    // long grid: normalize callers feed acctbal-scale columns
     // (acctbal² ≈ 1.2e8 ≪ the 2.25e9 envelope)
     val fitted = withStats(df,
-      Seq(exactMeanFast(col(c)).as("__m"), exactStdSampFast(col(c)).as("__s")))
+      Seq(exactMean(col(c), grid6).as("__m"),
+        exactStdSamp(col(c), grid6, grid6).as("__s")))
     val centered = if (center) col(c) - col("__m") else col(c)
     fitted.withColumn(out, centered / col("__s")).drop("__m", "__s")
   }
@@ -555,15 +556,15 @@ object PreprocessOps {
     *
     * One groupBy over the fact table produces the per-category sums; the
     * tiny encoding map broadcast-joins back — no second fact shuffle.
-    * Sums go through the exactSumFast long grid (bit-identical to the
+    * Sums go through the checked long grid (bit-identical to the
     * DECIMAL sums for |y| ≪ 2.25e9) so the encoding is deterministic
     * and oracle-comparable at any scale. */
   def targetEncodeSmoothed(df: DataFrame, cat: String, y: String,
                            out: String, m: Double = 10.0): DataFrame = {
-    val global = df.agg(exactSumFast(col(y)).as("__gs"),
+    val global = df.agg(grid6(col(y)).as("__gs"),
       count(col(y)).as("__gn"))
     val perCat = df.groupBy(col(cat))
-      .agg(exactSumFast(col(y)).as("__cs"), count(col(y)).as("__cn"))
+      .agg(grid6(col(y)).as("__cs"), count(col(y)).as("__cn"))
       .crossJoin(broadcast(global))
       .select(col(cat),
         round((col("__cs") + lit(m) * (col("__gs") / col("__gn"))) /

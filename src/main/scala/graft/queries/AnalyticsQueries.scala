@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 import graft.core.Tables
 import graft.core.Tables._
 import graft.similarity.SimilarityOps
@@ -18,14 +18,6 @@ object AnalyticsQueries {
   private def ord(s: SparkSession, d: String) = Tables.load(s, d, "orders")
   private def cust(s: SparkSession, d: String) = Tables.load(s, d, "customer")
   private def reg(s: SparkSession, d: String) = Tables.load(s, d, "region")
-
-  /** Order-independent sum of small double terms: round each term to 12
-    * decimals, sum as DECIMAL — deterministic across engines up to the
-    * per-term libm ulp (absorbed by the rounding). */
-  private def detSum(term: org.apache.spark.sql.Column) =
-    sum(round(term, 12).cast(DecimalType(38, 14))).cast(DoubleType)
-  private def sqlDetSum(term: String) =
-    s"CAST(SUM(CAST(ROUND($term, 12) AS DECIMAL(38,14))) AS DOUBLE)"
 
   val all: Seq[Q] = Seq(
 
@@ -107,10 +99,6 @@ object AnalyticsQueries {
         // ~1e-11 grid drift being absorbed by ROUND(…,6), a
         // scale-dependent tolerance; with both engines on the same
         // 1/n-scaled 1e-12 grid the equality is structural at any SF).
-        // The BIGINT scaled sum is the proven Lloyd fitSql twin of
-        // Tables.scaledLongSum.
-        def lsum(t: String) =
-          s"(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS BIGINT) / 1e12)"
         s"""WITH ranked AS (
            |  SELECT RANK() OVER (ORDER BY l_quantity)
            |           + (COUNT(*) OVER (PARTITION BY l_quantity) - 1) / 2.0 AS rxr,
@@ -120,9 +108,9 @@ object AnalyticsQueries {
            |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS nv FROM lineitem),
            |scaled AS (SELECT rxr / nv AS rx, ryr / nv AS ry
            |           FROM ranked CROSS JOIN nn),
-           |m AS (SELECT ${lsum("rx")} AS sx, ${lsum("ry")} AS sy,
-           |             ${lsum("rx * rx")} AS sxx, ${lsum("ry * ry")} AS syy,
-           |             ${lsum("rx * ry")} AS sxy,
+           |m AS (SELECT ${sqlScaledLongSum("rx")} AS sx, ${sqlScaledLongSum("ry")} AS sy,
+           |             ${sqlScaledLongSum("rx * rx")} AS sxx, ${sqlScaledLongSum("ry * ry")} AS syy,
+           |             ${sqlScaledLongSum("rx * ry")} AS sxy,
            |             CAST(COUNT(*) AS DOUBLE) AS n
            |      FROM scaled)
            |SELECT ROUND((n * sxy - sx * sy) /
@@ -239,12 +227,12 @@ object AnalyticsQueries {
         val x = col("l_quantity"); val y = col("l_extendedprice")
         // fast-grid bounds: |x| ≤ 51, |y| ≤ ~1.14e5, |x·y| ≤ 5.9e6,
         // |x²| ≤ 2601 — all ≪ 2.25e9; only y² (1.3e10) exceeds the
-        // envelope and keeps its single decimal sum (sqFast = false)
+        // envelope and keeps its single decimal sum
         val stats = li(s, d).agg(
-          exactMeanFast(x).as("mx"), exactMeanFast(y).as("my"),
-          exactVarSampFast(x).as("vx"),
-          exactVarSampFast(y, sqFast = false).as("vy"),
-          exactCovarSampFast(x, y).as("cxy"))
+          exactMean(x, grid6).as("mx"), exactMean(y, grid6).as("my"),
+          exactVarSamp(x, grid6, grid6).as("vx"),
+          exactVarSamp(y, grid6, exactSum).as("vy"),
+          exactCovarSamp(x, y, grid6, grid6).as("cxy"))
         val dx = x - col("mx"); val dy = y - col("my")
         val det = col("vx") * col("vy") - col("cxy") * col("cxy")
         val md2 = (dx * dx * col("vy") - dx * dy * col("cxy") * 2.0
@@ -282,14 +270,14 @@ object AnalyticsQueries {
         // ≤ 5.9e6 ≪ 2.25e9; only y² (1.3e10) exceeds the envelope and
         // keeps its single decimal sum
         val stats = li(s, d).agg(
-          exactMeanFast(x).as("mx"), exactMeanFast(y).as("my"),
-          exactMeanFast(z).as("mz"),
-          exactVarSampFast(x).as("vx"),
-          exactVarSampFast(y, sqFast = false).as("vy"),
-          exactVarSampFast(z).as("vz"),
-          exactCovarSampFast(x, y).as("cxy"),
-          exactCovarSampFast(x, z).as("cxz"),
-          exactCovarSampFast(y, z).as("cyz"))
+          exactMean(x, grid6).as("mx"), exactMean(y, grid6).as("my"),
+          exactMean(z, grid6).as("mz"),
+          exactVarSamp(x, grid6, grid6).as("vx"),
+          exactVarSamp(y, grid6, exactSum).as("vy"),
+          exactVarSamp(z, grid6, grid6).as("vz"),
+          exactCovarSamp(x, y, grid6, grid6).as("cxy"),
+          exactCovarSamp(x, z, grid6, grid6).as("cxz"),
+          exactCovarSamp(y, z, grid6, grid6).as("cyz"))
         val dx = x - col("mx"); val dy = y - col("my"); val dz = z - col("mz")
         val ca = col("vy") * col("vz") - col("cyz") * col("cyz")
         val cb = col("vx") * col("vz") - col("cxz") * col("cxz")
@@ -473,8 +461,8 @@ object AnalyticsQueries {
         // fast grid for f, price, f·price (≤ 5.9e6 ≪ 2.25e9); price²
         // (1.3e10) exceeds the envelope → that one sum stays decimal
         val fCols = feats.map { f =>
-          val r = exactCorrFast(col(f).cast("double"),
-            col("l_extendedprice").cast("double"), yyFast = false)
+          val r = exactCorr(col(f).cast("double"),
+            col("l_extendedprice").cast("double"), grid6, grid6, xx = grid6)
           round(r * r / (lit(1.0) - r * r) *
             (count(lit(1)).cast(DoubleType) - 2.0), 6).as(s"f_$f")
         }
@@ -537,9 +525,9 @@ object AnalyticsQueries {
         val dc = col("l_discount") * 10.0
         val t = col("l_tax") * 10.0
         li(s, d).agg(
-          round(sqrt(detSumFast((q - dc) * (q - dc))), 6).as("d_qty_disc"),
-          round(sqrt(detSumFast((q - t) * (q - t))), 6).as("d_qty_tax"),
-          round(sqrt(detSumFast((dc - t) * (dc - t))), 6).as("d_disc_tax")) // pre-scaled terms ≤ 4: fast-grid safe
+          round(sqrt(gridSum((q - dc) * (q - dc), 12)), 6).as("d_qty_disc"),
+          round(sqrt(gridSum((q - t) * (q - t), 12)), 6).as("d_qty_tax"),
+          round(sqrt(gridSum((dc - t) * (dc - t), 12)), 6).as("d_disc_tax")) // pre-scaled terms ≤ 4: fast-grid safe
       },
       Some { // same detSum grid as the Spark side
         def e(a: String, b: String) =

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.core.Tables
 import graft.core.Tables._
 import graft.queries.SqlGen._
@@ -18,8 +17,6 @@ object ExtraQueries {
   /** Deterministic per-feature info gain vs a target, all contingencies in
     * per-feature aggregations, entropy terms summed order-independently. */
   private def infoGainFor(df: DataFrame, feature: String, target: String) = {
-    val detSum = (c: org.apache.spark.sql.Column) =>
-      sum(round(c, 12).cast(DecimalType(38, 14))).cast(DoubleType)
     val cont = df.groupBy(col(feature).as("f"), col(target).as("c"))
       .agg(count(lit(1)).as("n"))
     val tot = cont.agg(sum("n").as("total"))
@@ -163,7 +160,7 @@ object ExtraQueries {
         val c = cust(s, d).select(col("c_custkey"), col("c_name"), col("c_acctbal"))
         val synth = cust(s, d).agg(
           lit(-1L).as("c_custkey"), lit("synthetic#mean").as("c_name"),
-          exactMeanFast(col("c_acctbal")).as("c_acctbal")) // acctbal ≤ ~1.1e4: fast grid
+          exactMean(col("c_acctbal"), grid6).as("c_acctbal")) // acctbal ≤ ~1.1e4: fast grid
         c.unionByName(synth).orderBy(col("c_custkey"))
       },
       Some(s"""SELECT c_custkey, c_name, c_acctbal FROM customer
@@ -237,10 +234,10 @@ object ExtraQueries {
         .groupBy(col("l_returnflag"))
         .agg(
           // fast grid: price·qty ≤ 5.9e6 ≪ 2.25e9
-          exactSumFast(col("l_extendedprice") * col("l_quantity")).as("wsum"),
-          exactSumFast(col("l_quantity")).as("wtotal"),
-          (exactSumFast(col("l_extendedprice") * col("l_quantity")) /
-            exactSumFast(col("l_quantity"))).as("wmean"),
+          grid6(col("l_extendedprice") * col("l_quantity")).as("wsum"),
+          grid6(col("l_quantity")).as("wtotal"),
+          (grid6(col("l_extendedprice") * col("l_quantity")) /
+            grid6(col("l_quantity"))).as("wmean"),
           count(lit(1)).as("n"))
         .orderBy(col("l_returnflag")),
       Some(s"""SELECT l_returnflag,
@@ -297,8 +294,9 @@ object ExtraQueries {
         // fast grid for every moment except extendedprice² (1.3e10 >
         // the 2.25e9 envelope) — that one sum stays decimal per pair
         // (quantity ≤ 51, discount ≤ 0.1, tax ≤ 0.08, price ≤ ~1.14e5)
-        def corrOf(x: String, y: String) = exactCorrFast(col(x), col(y),
-          xxFast = x != "l_extendedprice", yyFast = y != "l_extendedprice")
+        def sq(c: String): Sum = if (c == "l_extendedprice") exactSum else grid6
+        def corrOf(x: String, y: String) =
+          exactCorr(col(x), col(y), grid6, grid6, sq(x), sq(y))
         pairs.map { case (x, y) =>
           li(s, d).agg(
             lit(s"$x~$y").as("pair"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.core.Tables._
-import graft.ml.{ClusterEval, Correspondence, Learners, MLlibLearners}
+import graft.ml.{ClusterEval, Correspondence, Learners}
 import graft.queries.SqlGen._
 
 /** Learner/evaluation queries (SURVEY §2.11). Aggregation-based learners

@@ -31,12 +31,20 @@ object SqlGen {
     val n = s"CAST(COUNT(${x}) AS DOUBLE)"
     s"(${sqlSum(s"($x)*($y)")} - ${sqlSum(x)} * ${sqlSum(y)} / $n) / ($n - 1)"
   }
-  /** SQL twin of Tables.detSum: order-independent sum of derived doubles. */
-  def sqlDetSum(term: String): String =
-    s"CAST(SUM(CAST(ROUND($term, 12) AS DECIMAL(38,14))) AS DOUBLE)"
-  /** Twin of Tables.detSum(term, scale) — coarse grid for big terms. */
-  def sqlDetSum(term: String, scale: Int): String =
+  /** Twin of Tables.detSum(term, scale): order-independent sum of derived
+    * doubles (scale 12 by default, coarser for big terms). */
+  def sqlDetSum(term: String, scale: Int = 12): String =
     s"CAST(SUM(CAST(ROUND($term, $scale) AS DECIMAL(38,${scale + 2}))) AS DOUBLE)"
+  /** Twin of Tables.scaledLongSum and core.ScaledLongSums: the exact
+    * HUGEINT sum of the scaled longs, correctly rounded to DOUBLE, then
+    * the grid division. The VARCHAR step is the correct rounding: DuckDB's
+    * direct HUGEINT→DOUBLE cast rounds twice (it can miss by 1 ulp for
+    * negative sums past 2⁵⁴ and for any sum past 2⁶⁴), while the decimal
+    * string parses correctly rounded, like Spark's DECIMAL→DOUBLE and
+    * Java's BigInteger.doubleValue. A BIGINT cast of the sum would
+    * overflow past 2⁶³. */
+  def sqlScaledLongSum(t: String): String =
+    s"(CAST(CAST(SUM(CAST(ROUND(($t) * 1e12, 0) AS BIGINT)) AS VARCHAR) AS DOUBLE) / 1e12)"
   /** 32-bit int from first 8 hex chars of md5 — twin of Tables.hashVal32. */
   def sqlHash32(s: String): String =
     (1 to 8).map { i =>

@@ -105,7 +105,7 @@ object RelationalQueries {
         .join(broadcast(cust(s, d)), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))
         // fast grid: price·(1−disc) ≤ ~1.14e5 ≪ 2.25e9
-        .agg(exactSumFast(col("l_extendedprice") * (lit(1) - col("l_discount")))
+        .agg(grid6(col("l_extendedprice") * (lit(1) - col("l_discount")))
                .as("revenue"),
              count(lit(1)).as("n_lines"))
         .orderBy(col("c_mktsegment")),
@@ -164,7 +164,7 @@ object RelationalQueries {
         .agg(grouping(col("l_returnflag")).as("g_flag"),
           grouping(col("l_linestatus")).as("g_status"),
           count(lit(1)).as("n"),
-          exactSumFast(col("l_quantity")).as("sum_qty")) // qty ≤ 51: fast grid
+          grid6(col("l_quantity")).as("sum_qty")) // qty ≤ 51: fast grid
         .orderBy(col("g_flag"), col("g_status"),
           coalesce(col("l_returnflag"), lit("")),
           coalesce(col("l_linestatus"), lit(""))),
@@ -256,7 +256,7 @@ object RelationalQueries {
       // dim size — the query exercises the genuine skew fallback shape.
       (s, d) => {
         val flagStats = li(s, d).groupBy(col("l_returnflag"))
-          .agg(exactMeanFast(col("l_quantity")).as("flag_mean")) // qty ≤ 51: fast grid
+          .agg(exactMean(col("l_quantity"), grid6).as("flag_mean")) // qty ≤ 51: fast grid
         MergeOps.saltedJoin(
             li(s, d), flagStats.hint("shuffle_hash"),
             Seq("l_returnflag"), saltFrom = col("l_orderkey"), salts = 8)
@@ -348,7 +348,7 @@ object RelationalQueries {
 
     Q("pivot", // groupBy(row).pivot(col).agg — owpivot.py:55-460
       (s, d) => ReshapeOps.pivot(li(s, d), "l_returnflag", "l_linestatus",
-          Seq("F", "O"), exactSumFast(col("l_quantity"))) // qty ≤ 51: fast grid
+          Seq("F", "O"), grid6(col("l_quantity"))) // qty ≤ 51: fast grid
         .orderBy(col("l_returnflag")),
       Some(s"""SELECT l_returnflag,
               |  ${sqlSum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS "F",
@@ -381,10 +381,10 @@ object RelationalQueries {
     // ----- §2.5-ish stats (basic stats / distribution / contingency) ----
     Q("basic_stats",
       (s, d) => graft.functions.StatsOps.basicStats(li(s, d),
-          Seq("l_quantity", "l_extendedprice", "l_discount"),
-          // quantity² ≤ 2601 and discount² ≤ 0.01 ride the fast grid;
-          // extendedprice² ≈ 1.3e10 exceeds the 2.25e9 envelope
-          sqFast = Set("l_quantity", "l_discount")),
+          // quantity² ≤ 2601 and discount² ≤ 0.01 ride the grid;
+          // extendedprice² ≈ 1.3e10 leaves the 2.25e9 envelope
+          Seq("l_quantity" -> grid6, "l_extendedprice" -> exactSum,
+            "l_discount" -> grid6)),
       Some {
         val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
         val exprs = cols.flatMap { c => Seq(
@@ -436,9 +436,10 @@ object RelationalQueries {
       // fast grid for qty/price/qty·price (≤ 5.9e6 ≪ 2.25e9); price²
       // (1.3e10) exceeds the envelope → that one sum stays decimal
       (s, d) => li(s, d).agg(
-          exactCorrFast(col("l_quantity"), col("l_extendedprice"),
-            yyFast = false).as("corr_qty_price"),
-          exactCovarSampFast(col("l_quantity"), col("l_extendedprice")).as("covar_qty_price")),
+          exactCorr(col("l_quantity"), col("l_extendedprice"),
+            grid6, grid6, xx = grid6).as("corr_qty_price"),
+          exactCovarSamp(col("l_quantity"), col("l_extendedprice"),
+            grid6, grid6).as("covar_qty_price")),
       Some(s"""SELECT ${sqlCorr("l_quantity", "l_extendedprice")} AS corr_qty_price,
               |  ${sqlCovarSamp("l_quantity", "l_extendedprice")} AS covar_qty_price
               |FROM lineitem""".stripMargin)),
@@ -517,7 +518,7 @@ object RelationalQueries {
     Q("time_binning", // TimeVariable binning → date_trunc month
       (s, d) => ord(s, d)
         .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(count(lit(1)).as("n"), exactSumFast(col("o_totalprice")).as("total")) // totalprice ≤ ~6e5: fast grid
+        .agg(count(lit(1)).as("n"), grid6(col("o_totalprice")).as("total")) // totalprice ≤ ~6e5: fast grid
         .orderBy(col("month")),
       Some(s"""SELECT date_trunc('month', o_orderdate) AS month,
               |  COUNT(*) AS n, ${sqlSum("o_totalprice")} AS total

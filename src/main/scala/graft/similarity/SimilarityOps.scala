@@ -529,7 +529,7 @@ object SimilarityOps {
       .groupBy(col("query_id"), col("cid").as("neighbor_id"))
       // partial L2² between unit subvectors is ≤ 4 ≪ the 2.2e3
       // fast-grid bound; this agg runs per (query × candidate × m) row
-      .agg(round(graft.core.Tables.detSumFast(col("__d2")), 6).as("adc"))
+      .agg(round(gridSum(col("__d2"), 12), 6).as("adc"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -656,7 +656,7 @@ object SimilarityOps {
       .join(broadcast(lut), Seq("query_id", "s", "code"))
       .groupBy(col("query_id"), col("cid").as("neighbor_id"))
       // partial L2² ≤ 4 ≪ 2.2e3 — fast-grid safe (see pqTopKCosine)
-      .agg(round(graft.core.Tables.detSumFast(col("__d2")), 6).as("adc"))
+      .agg(round(gridSum(col("__d2"), 12), 6).as("adc"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

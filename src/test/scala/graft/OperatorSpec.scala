@@ -22,38 +22,6 @@ class OperatorSpec extends SparkSpec {
     assert(n1 == n2 && n1 > 0)
   }
 
-  test("scaledLongSum ≡ DECIMAL(38,0) sum on adversarial magnitudes and signs") {
-    import spark.implicits._
-    // values chosen so the scaled longs exercise all three radix-2²¹
-    // digits, both signs, the ±1e6 magnitude edge (|x| ≈ 2⁶⁰), zero,
-    // sub-digit values, and a group whose long sum would wrap 2⁶³
-    // (eight near-max terms) — the device must match the exact decimal
-    // sum bit-for-bit in every group
-    val vals = Seq(
-      ("g1", 1e6), ("g1", -1e6), ("g1", 0.0), ("g1", 1e-12),
-      ("g1", -3.5e-7), ("g1", 123456.789012), ("g2", 9.0e5),
-      ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5),
-      ("g2", 9.0e5), ("g2", 9.0e5), ("g2", 9.0e5), // Σ·10¹² = 7.2e18 > 2⁶³
-      ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5),
-      ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5), ("g3", -9.0e5),
-      ("g4", 2.0e-6), ("g4", -1.0e-6)).toDF("g", "v")
-    val dec = (sum(round(col("v") * lit(1e12), 0).cast("long")
-      .cast("decimal(38,0)")).cast("double") / lit(1e12)).cast("double")
-    val got = vals.groupBy("g")
-      .agg(Tables.scaledLongSum(col("v")).as("sr"), dec.as("dc"))
-      .collect()
-    assert(got.length == 4)
-    got.foreach { r =>
-      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
-        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
-        s"group ${r.getString(0)}: sr=${r.getDouble(1)} dc=${r.getDouble(2)}")
-    }
-    // empty input: NULL, like sum()
-    val empty = vals.filter(col("g") === "nope")
-      .agg(Tables.scaledLongSum(col("v")).as("s")).collect()
-    assert(empty.head.isNullAt(0))
-  }
-
   test("agg17 produces one row per group with all 18 columns") {
     val out = GroupByOps.agg17Exact(li, Seq("l_returnflag"), "l_quantity",
       "l_linestatus", col("l_orderkey"), col("l_orderkey").cast("string"))
