@@ -20,7 +20,8 @@ import graft.core.Tables.{exactSum, grid6}
   *    BigInteger spills.
   *
   * The decimal formulations below are the reference, verbatim from the
-  * helpers the grid replaced. Generated data runs through ScalaCheck with a
+  * helpers the grid replaced; the fixed tie and contract-edge vectors of
+  * each scale are in [[DetSumFastSpec]] and [[ExactSumFastSpec]]. Generated data runs through ScalaCheck with a
   * fixed seed, so a failure reproduces. */
 class SumKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -102,24 +103,6 @@ class SumKernelSpec extends SparkSpec {
       val bad = gridVsDecimal(groups, 12)
       bad.isEmpty :| bad.mkString("; ")
     })
-    // the contract-edge vector of the scale-12 grid's first spec
-    assert(gridVsDecimal(Seq(Seq(2251.0, -2251.0, 2250.999999999999,
-      -2250.999999999999, 1125.5, -1125.5, 2000.000000000001).map(d)), 12).isEmpty)
-  }
-
-  test("half-up ties round identically at scales 6 and 12") {
-    // shortest reprs ending in 5 one digit below the grid: the HALF_UP edge
-    // the grid must inherit from round(), not re-derive (the tie
-    // 2251799813.6852485 rounds to k = 2⁵¹ + 1, past the envelope: it is
-    // an out-of-envelope case below)
-    val ties6 = Seq(0.0000005, -0.0000015, 1.0000025, -1.0000035,
-      12345.6789995, -12345.6789985, 0.9999995, -0.9999995,
-      2251799813.6852465, -2251799813.6852475).map(d)
-    val ties12 = Seq(0.0000000000005, 1.0000000000015, -0.0000000000025,
-      123.4567890123455, -123.4567890123465, 2047.0000000000005,
-      0.12345678901235, -0.9999999999995).map(d)
-    assert(gridVsDecimal(Seq(ties6) ++ ties6.map(Seq(_)), 6).isEmpty)
-    assert(gridVsDecimal(Seq(ties12) ++ ties12.map(Seq(_)), 12).isEmpty)
   }
 
   test("NULL, NaN and ±Inf terms skip; all-NULL and all-non-finite groups are NULL on both paths") {
